@@ -186,5 +186,6 @@ def metrics(tracer, bench, res) -> dict:
     for layer in LAYERS:
         out[f"self.{layer}_s"] = (table.get(layer, {}).get("self_s", 0.0), "s")
     out["trace.overhead_s"] = (tracer.overhead_s, "s")
-    out["trace.ops_per_s"] = (res["e2e"]["ops_per_s"][0], "1/s")
+    ops = sum(len(v) for v in bench.lat.values())
+    out["trace.ops_per_s"] = (ops / res["loop_s"] if res["loop_s"] else 0.0, "1/s")
     return out

@@ -1,6 +1,6 @@
 """Benchmark entry point.
 
-    python3 perfbench/run.py --workload cdc_upsert --seed 1 --seconds 12 --trace 0
+    python3 perfbench/run.py --workload cdc_upsert --seed 1 --seconds 5 --trace 0
 
 Run from the root of a checkout. Inputs are generated from ``--seed``
 into ``.perfbench_work/`` (removed at exit); a traced run

@@ -1,12 +1,17 @@
 """The benchmark's workloads, run against the engine's public API.
 
-Each workload is a closed loop with one client (``cdc_upsert`` drains its
-two sources on two runner threads). ``Bench`` owns the Spark session,
-the scratch directory, the per-op latency log and the correctness
-checks. A workload prepares its tables ``SETUPS`` times and warms up
-once (``setup_s`` is the median preparation plus the warm-up), then
-loops for the requested seconds and verifies the final state against
-the replay oracle.
+Each workload is a closed loop with one client. ``Bench`` owns the Spark
+session, the scratch directory, the per-op latency and CPU log and the
+correctness checks. A workload prepares its tables ``SETUPS`` times
+(``setup_s`` is the median preparation CPU time), then runs whole rounds
+of its operations until the requested seconds have passed, and verifies
+the final state against the replay oracle.
+
+There is no separate warm-up: on a four-core host one round of Spark
+operations takes 15-25 s, so a run is one round, and the first
+preparation pays the session's cold start. Each operation in the loop
+is the first of its kind in the process, so its cost includes the code
+generation its plan needs.
 """
 
 from __future__ import annotations
@@ -36,19 +41,14 @@ from perfbench import checks, datagen
 SETUPS = 3  # set-ups per run; setup_s is their median
 
 #: ``cdc_upsert`` sizes: base rows and events per micro-batch
-CDC_ORDERS = 15_000
-CDC_LINEITEMS = 60_000
-CDC_ORDER_EVENTS = 2_000
-CDC_LINEITEM_EVENTS = 4_000
-CDC_FILES_PER_ROUND = 2  # micro-batches per source per drain round
+CDC_LINEITEMS = 30_000
+CDC_EVENTS = 4_000
 
 #: ``hot_table_mor`` sizes
 HOT_ORDERS = 30_000
 HOT_EVENTS = 500
-HOT_MAINT_EVERY = 2   # writes between run_advised passes
-HOT_READS_PER_WRITE = 2  # rotating reads after each write's lookup
 LOOKUP_KEYS = 16
-WRITE_AHEAD = 8       # envelope files written during set-up, per stream
+WRITE_AHEAD = 2       # envelope files written during set-up, per stream
 QUERY_SCALE = datagen.Scale(
     orders=30_000, customers=3_000, suppliers=200, parts=4_000, events=20_000, users=500
 )
@@ -61,11 +61,14 @@ QUERY_MIX = (
     "sessionize_events", "hourly_rollup_events",
 )
 
-#: the end-to-end metrics every workload reports, with their units
+#: the end-to-end metrics every workload reports, with their units. The
+#: timings are CPU seconds of this process plus the driver JVM: on a shared
+#: host wall time tracks the neighbours' load (whole ten-run medians moved
+#: by over a third between sets), CPU time much less
 E2E_UNITS = {
-    "setup_s": "s", "events_per_s": "1/s", "ops_per_s": "1/s",
-    "write_p50_s": "s", "write_tail_s": "s", "read_p50_s": "s", "read_tail_s": "s",
-    "maintenance_s": "s", "space_amp": "ratio", "peak_mem_mb": "MB",
+    "setup_s": "s", "events_per_cpu_s": "1/cpu_s", "write_cpu_s": "cpu_s",
+    "read_cpu_s": "cpu_s", "maintenance_cpu_s": "cpu_s", "space_amp": "ratio",
+    "peak_mem_mb": "MB",
 }
 
 _DDL_TYPES = {"int64": "BIGINT", "int32": "INT", "string": "STRING",
@@ -76,21 +79,6 @@ def envelope_ddl(schema) -> str:
     payload = ", ".join(f"`{f.name}`: {_DDL_TYPES[str(f.type)]}" for f in schema)
     return (f"`before` STRUCT<{payload}>, `after` STRUCT<{payload}>, "
             "`op` STRING, `ts_ms` BIGINT, `offset` BIGINT")
-
-
-def tail_rank(n: int) -> tuple[float, int]:
-    """The highest percentile with at least ten samples beyond it, as
-    ``(percentile, 1-based nearest rank)``; never below the median."""
-    rank = max(n - 10, n // 2 + 1)
-    return 100.0 * rank / n, rank
-
-
-def tail(values: list[float]) -> tuple[float, float]:
-    """``(value, percentile)`` of :func:`tail_rank` over ``values``."""
-    if not values:
-        return 0.0, 0.0
-    pct, rank = tail_rank(len(values))
-    return sorted(values)[rank - 1], pct
 
 
 def dir_bytes(path: str) -> int:
@@ -109,6 +97,7 @@ class Bench:
         self.tracer = tracer
         self.spark = None
         self.lat: dict[str, list[float]] = {"write": [], "read": [], "maint": []}
+        self.cpu: dict[str, list[float]] = {"write": [], "read": [], "maint": []}
         self.query_lat: dict[str, list[float]] = {}
         self.attempted = 0
         self.failed = 0
@@ -120,6 +109,7 @@ class Bench:
         self._dirs: dict[str, str] = {}
         self._store: WatermarkStore | None = None
         self._n_dirs = 0
+        self._jvm_stat: str | None = None
 
     # -- session -----------------------------------------------------------
     def start_session(self):
@@ -128,17 +118,40 @@ class Bench:
             self.spark.stop()
         local = os.path.join(self.work, "spark-local")
         os.makedirs(local, exist_ok=True)
+        # the whole heap up front and the serial collector: peak RSS then
+        # does not depend on when the collector grows the heap, and no GC
+        # threads compete with Spark's task threads on a small host. A run
+        # lives about a minute: the optimising JIT compiler (C2) would burn
+        # ~30 CPU-seconds of it compiling code that never pays back, so
+        # compilation stops at C1 (loop CPU time less than halved)
+        java_opts = (f"-Djava.io.tmpdir={os.path.join(self.work, 'tmp')} "
+                     f"-Xms{os.environ['SPARK_GRAFT_DRIVER_MEM']} -XX:+UseSerialGC "
+                     "-XX:TieredStopAtLevel=1")
         self.spark = session_mod.create_spark_session(
             app_name="perfbench",
             extra_conf={
                 "spark.local.dir": local,
                 "spark.sql.warehouse.dir": os.path.join(self.work, "spark-warehouse"),
-                "spark.driver.extraJavaOptions":
-                    f"-Djava.io.tmpdir={os.path.join(self.work, 'tmp')}",
+                "spark.driver.extraJavaOptions": java_opts,
             },
         )
         self.spark.sparkContext.setLogLevel("ERROR")
+        pid = self.spark._jvm.java.lang.ProcessHandle.current().pid()
+        self._jvm_stat = f"/proc/{pid}/stat"
         return self.spark
+
+    def cpu_s(self) -> float:
+        """CPU seconds (user + system) used so far by this process and the
+        driver JVM, which runs every Spark task thread in local mode."""
+        import resource
+
+        ru = resource.getrusage(resource.RUSAGE_SELF)
+        jvm_ticks = 0  # before the first session there is no JVM yet
+        if self._jvm_stat is not None:
+            with open(self._jvm_stat) as f:
+                fields = f.read().rsplit(")", 1)[1].split()
+            jvm_ticks = int(fields[11]) + int(fields[12])  # utime, stime
+        return ru.ru_utime + ru.ru_stime + jvm_ticks / os.sysconf("SC_CLK_TCK")
 
     def ledger(self) -> WatermarkStore:
         """The watermark ledgers, in an ops warehouse created once per run
@@ -172,7 +185,7 @@ class Bench:
         if self.tracer is not None:
             group = f"{kind}-{self.attempted}"
             self.spark.sparkContext.setJobGroup(group, label or kind)
-        t0 = time.perf_counter()
+        c0, t0 = self.cpu_s(), time.perf_counter()
         try:
             if self.tracer is not None:
                 result = self.tracer.span(f"op:{label or kind}", fn, *args, **kwargs)
@@ -183,6 +196,7 @@ class Bench:
             traceback.print_exc(file=sys.stderr)
             return None
         self.lat[kind].append(time.perf_counter() - t0)
+        self.cpu[kind].append(self.cpu_s() - c0)
         if group is not None:
             self.record_jobs(kind, group)
         return result
@@ -243,44 +257,40 @@ class Bench:
         return referenced / compact
 
     def pause_trace(self, paused: bool) -> None:
-        """Stop (or resume) recording spans, e.g. around the warm-up and
-        the final checks, which are not part of the measured loop."""
+        """Stop (or resume) recording spans, e.g. around the final checks,
+        which are not part of the measured loop."""
         if self.tracer is not None:
             self.tracer.paused = paused
 
-    def warm_up(self, fn) -> float:
-        """Run ``fn`` (the workload's own ops) once before timing, so lazy
-        set-up and code generation finish first; its samples are dropped
-        and its wall time returned."""
-        t0 = time.perf_counter()
-        self.pause_trace(True)
-        fn()
-        self.pause_trace(False)
-        for v in self.lat.values():
-            v.clear()
-        self.query_lat.clear()
-        self.jobs.clear()
-        self.events_applied = 0
-        return time.perf_counter() - t0
+    def prepare(self, setup) -> tuple:
+        """Run ``setup`` SETUPS times; return the last result and the CPU
+        time of each (the first includes the JVM's start)."""
+        times = []
+        for _ in range(SETUPS):
+            c0, t0 = self.cpu_s(), time.perf_counter()
+            result = setup()
+            times.append(self.cpu_s() - c0)
+            print(f"prep wall={time.perf_counter() - t0:.2f} cpu={times[-1]:.2f}",
+                  file=sys.stderr)
+        return result, times
 
-    def e2e(self, prep_times, warm_s, loop_s, tables, finals) -> dict:
-        """End-to-end metrics; ``setup_s`` is the median preparation time
-        plus the one warm-up."""
-        print(f"preps={[round(t, 2) for t in prep_times]} warm_s={warm_s:.2f} "
-              f"loop_s={loop_s:.2f}", file=sys.stderr)
+    def e2e(self, prep_cpu, loop_s, loop_cpu, tables, finals) -> dict:
+        """End-to-end metrics; ``setup_s`` is the median preparation CPU
+        time. Per-op figures are means: a one-round run has one sample of
+        each write and maintenance op and one to five unlike reads, and
+        the median of five unlike reads jumps between op kinds. Wall-time
+        figures go to standard error only."""
         ops = sum(len(v) for v in self.lat.values())
-        values = {"setup_s": statistics.median(prep_times) + warm_s,
-                  "events_per_s": self.events_applied / loop_s,
-                  "ops_per_s": ops / loop_s}
-        for kind in ("write", "read"):
-            vals = self.lat[kind]
-            value, pct = tail(vals)
-            values[f"{kind}_p50_s"] = statistics.median(vals) if vals else 0.0
-            values[f"{kind}_tail_s"] = value
-            print(f"{kind}: n={len(vals)} tail=p{pct:.0f} "
-                  f"samples={[round(v, 3) for v in vals]}", file=sys.stderr)
-        maint_s = self.lat["maint"]
-        values["maintenance_s"] = statistics.median(maint_s) if maint_s else 0.0
+        print(f"loop wall={loop_s:.2f} cpu={loop_cpu:.2f} "
+              f"events_per_s={self.events_applied / loop_s:.2f} ops_per_s={ops / loop_s:.4f}",
+              file=sys.stderr)
+        values = {"setup_s": statistics.median(prep_cpu),
+                  "events_per_cpu_s": self.events_applied / loop_cpu}
+        for kind, name in (("write", "write"), ("read", "read"), ("maint", "maintenance")):
+            vals, cpu = self.lat[kind], self.cpu[kind]
+            values[f"{name}_cpu_s"] = statistics.fmean(cpu) if cpu else 0.0
+            print(f"{kind}: n={len(vals)} wall={[round(v, 3) for v in vals]} "
+                  f"cpu={[round(v, 3) for v in cpu]}", file=sys.stderr)
         values["space_amp"] = self.space_amp(tables, finals)
         values["peak_mem_mb"] = self.peak_mem_mb()
         return {name: (values[name], unit) for name, unit in E2E_UNITS.items()}
@@ -322,20 +332,21 @@ def table_services(service, name: str) -> None:
 
 
 class TimedRunner(CdcStreamRunner):
-    """Runner that logs each micro-batch's wall time: from the start of
-    its foreachBatch body to its commit and ledger append."""
+    """Runner that logs each micro-batch's wall and CPU time: from the
+    start of its foreachBatch body to its commit and ledger append."""
 
     def __init__(self, bench: Bench, *args, **kwargs):
         super().__init__(*args, **kwargs)
         self.bench = bench
         self.batches: list[float] = []
+        self.batch_cpu: list[float] = []
 
     def _process_batch(self, batch_df, batch_id, source, target):
         tracer = self.bench.tracer
         group = f"batch-{source.name}-{batch_id}"
         if tracer is not None:
             self.spark.sparkContext.setJobGroup(group, "cdc batch")
-        t0 = time.perf_counter()
+        c0, t0 = self.bench.cpu_s(), time.perf_counter()
         if tracer is not None:
             tracer.span("streaming.runner:process_batch", super()._process_batch,
                         batch_df, batch_id, source, target,
@@ -343,6 +354,7 @@ class TimedRunner(CdcStreamRunner):
         else:
             super()._process_batch(batch_df, batch_id, source, target)
         self.batches.append(time.perf_counter() - t0)
+        self.batch_cpu.append(self.bench.cpu_s() - c0)
         if tracer is not None:
             self.bench.record_jobs("write", group)
 
@@ -383,98 +395,73 @@ class Backlog:
 
 
 def cdc_upsert(bench: Bench, seconds: float) -> dict:
-    """Copy-on-write CDC drain of ``orders`` and ``lineitem`` through the
-    streaming runner (two sources, two threads), with a watermark ledger
-    and a table-services pass after every drain round."""
-    streams = {
-        "orders": datagen.orders_stream(CDC_ORDERS, QUERY_SCALE.customers, bench.seed),
-        "lineitem": datagen.lineitem_stream(
-            CDC_LINEITEMS, QUERY_SCALE.parts, QUERY_SCALE.suppliers, bench.seed),
-    }
-    sizes = {"orders": CDC_ORDER_EVENTS, "lineitem": CDC_LINEITEM_EVENTS}
+    """Copy-on-write CDC drain of ``lineitem`` through the streaming
+    runner, with a watermark ledger, a freshness lookup and a
+    table-services pass after every micro-batch."""
+    s = datagen.lineitem_stream(CDC_LINEITEMS, QUERY_SCALE.parts, QUERY_SCALE.suppliers,
+                                bench.seed)
 
     def setup():
         bench.start_session()
         catalog = LakeCatalog(bench.spark, bench.fresh_dir("wh"))
-        ckpt = bench.fresh_dir("ckpt")
-        tables, sources, backlogs = {}, {}, {}
-        for name, s in streams.items():
-            backlogs[name] = Backlog(s, sizes[name], bench.fresh_dir(f"backlog-{name}"),
-                                     WRITE_AHEAD)
-            tables[name] = rtas(bench, catalog, name, s.base, s.schema, s.key_cols)
-            sources[name] = SourceConfig(
-                name=f"default.{name}", path=bench.fresh_dir(f"landing-{name}"),
-                format="parquet", schema=envelope_ddl(s.schema), key_cols=s.key_cols,
-                max_files_per_trigger=1, write_mode="copy-on-write",
-            )
+        backlog = Backlog(s, CDC_EVENTS, bench.fresh_dir("backlog"), WRITE_AHEAD)
+        table = rtas(bench, catalog, "lineitem", s.base, s.schema, s.key_cols)
+        source = SourceConfig(
+            name="default.lineitem", path=bench.fresh_dir("landing"), format="parquet",
+            schema=envelope_ddl(s.schema), key_cols=s.key_cols, max_files_per_trigger=1,
+            write_mode="copy-on-write",
+        )
         store = bench.ledger()
-        runner = TimedRunner(bench, bench.spark, store=store, checkpoint_root=ckpt,
-                             dag_id="cdc")
-        return catalog, tables, sources, backlogs, store, runner
+        runner = TimedRunner(bench, bench.spark, store=store,
+                             checkpoint_root=bench.fresh_dir("ckpt"), dag_id="cdc")
+        return catalog, table, source, backlog, store, runner
 
-    prep_times = []
-    for _ in range(SETUPS):
-        t0 = time.perf_counter()
-        catalog, tables, sources, backlogs, store, runner = setup()
-        prep_times.append(time.perf_counter() - t0)
+    (catalog, table, source, backlog, store, runner), prep_times = bench.prepare(setup)
     service = maint.MaintenanceService(catalog, store)
-    replays = {n: s.replay(0) for n, s in streams.items()}
-    pairs = [(sources[n], tables[n]) for n in streams]
+    replay = s.replay(0)
 
-    def drain_round(n_files):
-        """Land ``n_files`` micro-batches per source, drain them, then read
-        each batch's newest upserted keys back (the freshness reads)."""
-        first = {name: b.landed for name, b in backlogs.items()}
-        for name in streams:
-            for _ in range(n_files):
-                backlogs[name].land(sources[name].path)
+    def drain_round():
+        """Land one micro-batch, drain it, then read its newest upserted
+        keys back (the freshness read)."""
+        backlog.land(source.path)
         n_before = len(runner.batches)
-        bench.attempted += n_files * len(streams)
-        for name, err in runner.run_sources(pairs, concurrency=2).items():
+        bench.attempted += 1
+        for name, err in runner.run_sources([(source, table)], concurrency=1).items():
             bench.check(err is None, f"runner source {name}: {err}")
         done = runner.batches[n_before:]
-        bench.failed += n_files * len(streams) - len(done)
+        bench.failed += 1 - len(done)
         bench.lat["write"].extend(done)
-        for name, s in streams.items():
-            landed = s.batches[first[name]:backlogs[name].landed]
-            for batch in landed:
-                replays[name].apply(batch)
-                bench.events_applied += batch["events"]
-            for batch in landed:
-                keys = batch["key"][batch["op"] != "d"][-LOOKUP_KEYS:]
-                got = bench.op("read", lambda: tables[name].lookup(
-                    keys_frame(bench.spark, s, keys)).toPandas(), label="lookup")
-                if got is not None:
-                    bench.check(
-                        checks.frame_matches(got, replays[name].rows(keys), s.key_cols),
-                        f"{name} lookup after batch {backlogs[name].landed}")
+        bench.cpu["write"].extend(runner.batch_cpu[n_before:])
+        batch = s.batches[backlog.landed - 1]
+        replay.apply(batch)
+        bench.events_applied += batch["events"]
+        keys = batch["key"][batch["op"] != "d"][-LOOKUP_KEYS:]
+        got = bench.op("read", lambda: table.lookup(
+            keys_frame(bench.spark, s, keys)).toPandas(), label="lookup")
+        if got is not None:
+            bench.check(checks.frame_matches(got, replay.rows(keys), s.key_cols),
+                        f"lookup after batch {backlog.landed}")
 
-    warm_s = bench.warm_up(lambda: drain_round(1))
-    t_start = time.perf_counter()
+    c_start, t_start = bench.cpu_s(), time.perf_counter()
     while time.perf_counter() - t_start < seconds:
-        drain_round(CDC_FILES_PER_ROUND)
-        for name in streams:
-            bench.op("maint", table_services, service, f"default.{name}",
-                     label="maintenance")
+        drain_round()
+        bench.op("maint", table_services, service, "default.lineitem", label="maintenance")
     loop_s = time.perf_counter() - t_start
+    loop_cpu = bench.cpu_s() - c_start
     bench.pause_trace(True)
 
-    # final state: each table equals the replay oracle, and the ledger
+    # final state: the table equals the replay oracle, and the ledger
     # accounts for every event landed
-    finals = {}
-    for name, s in streams.items():
-        finals[name] = tables[name].read().toPandas()
-        bench.check(checks.frame_matches(finals[name][payload_cols(s)],
-                                         replays[name].rows(), s.key_cols),
-                    f"{name} final table equals replay oracle")
-        ledger = store.cdc().read().where(f"table_name = '{name}'").toPandas()
-        want = sum(b["events"] for b in s.batches[: backlogs[name].landed])
-        got_events = int(ledger["event_count"].sum())
-        bench.check(got_events == want, f"{name} ledger events {got_events} != {want}")
-    applied = [b for n, s in streams.items() for b in s.batches[: backlogs[n].landed]]
-    dedup = {"events_in": sum(b["events"] for b in applied),
-             "rows_after_dedup": sum(b["distinct_keys"] for b in applied)}
-    return {"e2e": bench.e2e(prep_times, warm_s, loop_s, tables, finals),
+    final = table.read().toPandas()
+    bench.check(checks.frame_matches(final[payload_cols(s)], replay.rows(), s.key_cols),
+                "lineitem final table equals replay oracle")
+    ledger = store.cdc().read().where("table_name = 'lineitem'").toPandas()
+    applied = s.batches[: backlog.landed]
+    want = sum(b["events"] for b in applied)
+    got_events = int(ledger["event_count"].sum())
+    bench.check(got_events == want, f"ledger events {got_events} != {want}")
+    dedup = {"events_in": want, "rows_after_dedup": sum(b["distinct_keys"] for b in applied)}
+    return {"e2e": bench.e2e(prep_times, loop_s, loop_cpu, {"lineitem": table}, {"lineitem": final}),
             "loop_s": loop_s, "dedup": dedup}
 
 
@@ -482,7 +469,7 @@ def cdc_upsert(bench: Bench, seconds: float) -> dict:
 def hot_table_mor(bench: Bench, seconds: float) -> dict:
     """Merge-on-read CDC writes on one ``orders`` table beside lookups,
     range scans, full reads, counts and the analysts' query mix, with an
-    advised maintenance pass every HOT_MAINT_EVERY writes."""
+    advised maintenance pass after every write."""
     import __spark_entry__ as entry
 
     stream = datagen.orders_stream(HOT_ORDERS, QUERY_SCALE.customers, bench.seed)
@@ -498,11 +485,7 @@ def hot_table_mor(bench: Bench, seconds: float) -> dict:
         store = bench.ledger()
         return catalog, table, store, sf_dir, backlog
 
-    prep_times = []
-    for _ in range(SETUPS):
-        t0 = time.perf_counter()
-        catalog, table, store, sf_dir, backlog = setup()
-        prep_times.append(time.perf_counter() - t0)
+    (catalog, table, store, sf_dir, backlog), prep_times = bench.prepare(setup)
     service = maint.MaintenanceService(catalog, store)
     replay = stream.replay(0)
     first_results: dict[str, list] = {}
@@ -554,20 +537,10 @@ def hot_table_mor(bench: Bench, seconds: float) -> dict:
             bench.query_lat.setdefault(qname, []).append(time.perf_counter() - t_q)
             first_results.setdefault(qname, rows)
 
-    reads_done = [0]
-
-    def rotating_read():
-        """The next read of the rotation: scan, full read, count, query
-        (the query mix advances one query per turn of the rotation)."""
-        k = reads_done[0]
-        reads_done[0] += 1
-        if k % 4 == 3:
-            query(QUERY_MIX[k // 4 % len(QUERY_MIX)])
-        else:
-            (scan, full_read, count)[k % 4]()
-
-    def cycle():
-        """One write, the lookup of its newest keys, two rotating reads."""
+    def cycle(k: int) -> bool:
+        """One write, the lookup of its newest keys, one read of each other
+        kind (the query mix advances one query per cycle), then an advised
+        maintenance pass."""
         if bench.op("write", write, label="cdc_mor") is None:
             return False
         batch = stream.batches[backlog.landed - 1]
@@ -584,28 +557,21 @@ def hot_table_mor(bench: Bench, seconds: float) -> dict:
             bench.check(checks.frame_matches(got[payload_cols(stream)], replay.rows(keys),
                                              stream.key_cols),
                         f"lookup after write {backlog.landed}")
-        for _ in range(HOT_READS_PER_WRITE):
-            rotating_read()
+        scan()
+        full_read()
+        count()
+        query(QUERY_MIX[k % len(QUERY_MIX)])
+        bench.op("maint", maint.run_advised, service, "default.orders", label="run_advised")
         return True
 
-    def warm():
-        cycle()
-        while reads_done[0] % 4:
-            rotating_read()
-        bench.op("maint", maint.run_advised, service, "default.orders", label="run_advised")
-
-    warm_s = bench.warm_up(warm)
-    t_start = time.perf_counter()
-    # whole maintenance periods only, so every run ends on the same phase
-    n_writes = 0
-    while time.perf_counter() - t_start < seconds or n_writes % HOT_MAINT_EVERY:
-        if not cycle():
+    c_start, t_start = bench.cpu_s(), time.perf_counter()
+    cycles = 0
+    while time.perf_counter() - t_start < seconds:
+        if not cycle(cycles):
             break
-        n_writes += 1
-        if n_writes % HOT_MAINT_EVERY == 0:
-            bench.op("maint", maint.run_advised, service, "default.orders",
-                     label="run_advised")
+        cycles += 1
     loop_s = time.perf_counter() - t_start
+    loop_cpu = bench.cpu_s() - c_start
 
     if bench.tracer is not None:  # per-query timings: the whole mix once
         for qname in QUERY_MIX:
@@ -627,7 +593,7 @@ def hot_table_mor(bench: Bench, seconds: float) -> dict:
         ok, detail = checks.matches_oracle(rows, sf_dir, entry.oracle_sql()[qname])
         bench.check(ok, f"query {qname} vs DuckDB oracle: {detail}")
     applied = stream.batches[:backlog.landed]
-    return {"e2e": bench.e2e(prep_times, warm_s, loop_s, {"orders": table},
+    return {"e2e": bench.e2e(prep_times, loop_s, loop_cpu, {"orders": table},
                              {"orders": final}),
             "loop_s": loop_s,
             "dedup": {"events_in": sum(b["events"] for b in applied),
