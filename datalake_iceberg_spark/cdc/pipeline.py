@@ -1,4 +1,4 @@
-"""CDC apply pipeline: envelope → flatten → cast → dedup-latest → MERGE/DELETE.
+"""CDC apply pipeline: envelope → flatten → cast → dedup-latest → MERGE+DELETE.
 
 Rebuilds the semantics of the reference's ``src/utils/cdc_pipeline.py``
 batch processor as composable DataFrame transforms:
@@ -17,8 +17,10 @@ batch processor as composable DataFrame transforms:
    batch to the final state. MERGE forbids duplicate source keys, so this
    must run before every merge.
 5. ``split_upserts_deletes`` — op-code split (``cdc_pipeline.py:206-207``).
-6. ``apply_cdc_changes`` — MERGE upserts, then DELETE the delete-set
-   (``cdc_pipeline.py:221-251``) against a :class:`LakeTable`.
+6. ``apply_cdc_changes`` — MERGE the upserts and DELETE the delete-set
+   (``cdc_pipeline.py:221-251``) against a :class:`LakeTable` as one
+   keyed rewrite: one probe, one write and one commit carrying one
+   ``txn.<app>`` marker per micro-batch.
 
 Scale notes: steps 1-3 and 5 are stateless projections/filters (codegen,
 no shuffle). Step 4 shuffles once on ``id_iceberg`` — the same shuffle the
@@ -137,31 +139,37 @@ def apply_cdc_changes(
     mode: str = "copy-on-write",
     txn_app: str | None = None,
     txn_version: int | None = None,
-) -> dict:
-    """MERGE the upserts, DELETE the delete-set (reference
-    ``cdc_pipeline.py:221-251``). Dedup already guarantees unique keys.
+):
+    """Apply one deduplicated micro-batch — upserts and the delete-set —
+    as ONE keyed rewrite and ONE commit: ``LakeTable.merge(upserts,
+    deletes=...)``, the reference's ``MERGE INTO`` + ``DELETE``
+    (``cdc_pipeline.py:221-251``) fused the way Delta runs a MERGE with
+    a ``WHEN MATCHED … THEN DELETE`` clause. Dedup already guarantees
+    unique, disjoint keys, so the fused result equals MERGE-then-DELETE.
+    A batch with no rows on either side makes no commit. Returns the
+    committed snapshot (the current one when nothing was committed).
 
-    ``mode`` selects the write strategy for BOTH applies —
-    ``"copy-on-write"`` (read-optimized, the reference's default) or
-    ``"merge-on-read"`` (O(batch) commits for hot high-frequency
-    streams; schedule ``rewrite_position_delete_files`` to fold the
-    accumulated eras, as the reference does via
-    ``position_delete_interval``)."""
-    stats = {"upserts": 0, "deletes": 0}
-    # distinct app ids per sub-operation: one replayed micro-batch must
-    # skip BOTH applies independently (the merge landing must not mask
-    # an unapplied delete, or vice versa)
-    up_app = f"{txn_app}:upsert" if txn_app else None
-    del_app = f"{txn_app}:delete" if txn_app else None
-    if not upserts.isEmpty():
-        table.merge(upserts, assert_unique_key=False, mode=mode,
-                    txn_app=up_app, txn_version=txn_version)
-        stats["upserts"] = 1
-    if not deletes.isEmpty():
-        table.delete_keys(deletes.select(SURROGATE_KEY_COL), mode=mode,
-                          txn_app=del_app, txn_version=txn_version)
-        stats["deletes"] = 1
-    return stats
+    ``mode`` selects the write strategy — ``"copy-on-write"``
+    (read-optimized, the reference's default) or ``"merge-on-read"``
+    (O(batch) commits for hot high-frequency streams; schedule
+    ``rewrite_position_delete_files`` to fold the accumulated eras, as
+    the reference does via ``position_delete_interval``).
+
+    ``txn_app``/``txn_version`` make the apply exactly-once under
+    replay: the commit records the single ``txn.<app>`` marker, and a
+    batch at or below it is skipped. Batches committed by the earlier
+    two-commit scheme carry ``txn.<app>:upsert`` and ``txn.<app>:delete``
+    markers instead; a batch at or below BOTH is skipped, and any other
+    legacy state re-applies the whole batch, which converges because
+    applying a final-state-per-key batch is idempotent."""
+    if txn_app is not None and txn_version is not None and table.exists():
+        snap = table.snapshot()
+        legacy = [snap.properties.get(f"txn.{txn_app}:{side}")
+                  for side in ("upsert", "delete")]
+        if all(m is not None and txn_version <= int(m) for m in legacy):
+            return snap
+    return table.merge(upserts, deletes=deletes, assert_unique_key=False, mode=mode,
+                       txn_app=txn_app, txn_version=txn_version)
 
 
 def batch_stats(df: DataFrame, ts_col: str = AUDIT_COL, offset_col: str = OFFSET_COL):

@@ -74,6 +74,8 @@ UNION_LEG_ROWS_PER_TASK = 100_000
 #: says it produces table-scale output) beats serializing it into the
 #: executor cache and spilling
 MERGE_PERSIST_MAX_BYTES = 8 * TARGET_WRITE_BYTES
+#: marks the delete-key rows of a copy-on-write keyed rewrite's batch
+_DELETE_FLAG = "__keyed_delete"
 # above this many distinct keys a lookup stays a distributed semi-join
 # (strategy left to AQE) — an IN-list that size stops being a "point"
 # lookup and bloats the plan
@@ -248,6 +250,11 @@ def _dnf_expr(dnf: list[list[tuple]]):
         term = _filter_expr(branch)
         cond = term if cond is None else cond | term
     return cond
+
+
+def _upsert_rows(batch: DataFrame) -> DataFrame:
+    """The upsert side of a ``_DELETE_FLAG``-tagged keyed-rewrite batch."""
+    return batch.where(~F.col(_DELETE_FLAG)).drop(_DELETE_FLAG)
 
 
 def _commit_dir_of(rel_dir: str) -> str:
@@ -1370,7 +1377,7 @@ class LakeTable:
             staged = (
                 staged.withColumn("_pt", _exact_partition_col(combo, nparts))
                 .repartition(nparts, "_pt")
-                .drop("_pt")
+                .drop("_pt", *(drop_after_sort or []))
             )
             (
                 staged.write.partitionBy("_bucket")
@@ -1680,7 +1687,7 @@ class LakeTable:
         n_buckets as the data, so a key in bucket X's delete file cannot
         match a row outside bucket X; and within one commit every delete
         dir of a bucket carries identical ``covers`` (see
-        ``_delete_keys_mor``), so the commit-level signature is exact.
+        ``_keyed_mor``), so the commit-level signature is exact.
         Dirs no delete covers take the plain fast path."""
         plain: list[str] = []
         groups: dict[frozenset, tuple[list[str], set[str]]] = {}
@@ -3305,6 +3312,7 @@ class LakeTable:
         txn_app: str | None = None,
         txn_version: int | None = None,
         update_columns: list[str] | None = None,
+        deletes: DataFrame | None = None,
     ) -> Snapshot:
         """Keyed upsert: WHEN MATCHED UPDATE SET all / WHEN NOT MATCHED INSERT all.
 
@@ -3317,15 +3325,26 @@ class LakeTable:
         read & rewritten (manifest-level partition pruning), and within
         them only the dirs whose key range can intersect the batch.
 
+        ``deletes=`` (a frame carrying the key columns; other columns are
+        ignored) adds Delta's ``WHEN MATCHED … THEN DELETE`` clause: the
+        batch's upserts and deletes apply as ONE keyed rewrite and ONE
+        commit (one txn marker), ``target ⟕anti (source keys ∪ delete
+        keys) ∪ source``. A key present in both ``deletes`` and ``source``
+        is upserted — the source wins, in both modes. The CDC pipeline
+        applies every micro-batch this way (``cdc.apply_cdc_changes``).
+        A batch whose both sides are empty makes no commit and returns
+        the current snapshot.
+
         ``mode="merge-on-read"`` (Iceberg's ``write.merge.mode``
         choice): the batch appends as new data dirs and its key set
         doubles as an equality-delete era covering only the PRE-commit
         dirs — matched target rows are masked at read, every source row
         lands, and commit cost is O(batch) regardless of how big the
-        touched buckets are. Reads pay one anti-join per merge/delete
-        era until ``rewrite_position_delete_files`` folds them in; the
-        hot-ingest pattern is MoR merges + a scheduled fold, exactly
-        like MoR deletes.
+        touched buckets are. Delete keys are written as delete-only
+        dirs of the same era (same ``covers``), so a read applies a
+        batch's upserts and deletes as one anti-join. Reads pay one
+        anti-join per era until ``rewrite_position_delete_files`` folds
+        them in; the hot-ingest pattern is MoR merges + a scheduled fold.
 
         ``update_columns=[...]`` gives the Iceberg/Delta partial-update
         clause — ``WHEN MATCHED THEN UPDATE SET only these columns
@@ -3353,40 +3372,10 @@ class LakeTable:
             )
             return self.merge(
                 eff, assert_unique_key=assert_unique_key, mode=mode,
-                txn_app=txn_app, txn_version=txn_version,
+                txn_app=txn_app, txn_version=txn_version, deletes=deletes,
             )
-        if mode == "merge-on-read":
-            return self._merge_mor(source, assert_unique_key,
-                                   txn_app=txn_app, txn_version=txn_version)
-        if mode != "copy-on-write":
-            raise ValueError(f"unknown merge mode {mode!r}")
-        snap = self.snapshot()
-        if not snap.key:
-            raise ValueError("merge requires a keyed table")
-        from pyspark import StorageLevel
-
-        # The source feeds THREE consumers in one commit: the
-        # duplicate-key/bounds probe (or the affected-buckets probe),
-        # the anti-join build side, and the union leg of the rewrite.
-        # Persist it batch-sized for the commit's duration (the same
-        # policy the partial-update branch above and the CDC pipeline
-        # already apply) so the caller's upstream pipeline runs once,
-        # and the union leg reads cached blocks instead of re-scanning
-        # — the re-scan previously ran as a second, much lighter task
-        # population inside the write's map stage, reading as 3.7x
-        # max/median "skew" in the r14 sf1 capture. Size-gated (see
-        # _persist_batch): above the cap, re-running the source beats
-        # serializing a table-sized batch into the executor cache and
-        # spilling it.
-        source, cached = self._persist_batch(self._align(source))
-        try:
-            return self._merge_cow(
-                source, snap, assert_unique_key,
-                txn_app=txn_app, txn_version=txn_version,
-            )
-        finally:
-            if cached is not None:
-                cached.unpersist()
+        return self._keyed_rewrite(source, deletes, mode, assert_unique_key,
+                                   "merge", txn_app, txn_version)
 
     def _persist_batch(self, df: DataFrame):
         """(df', handle) — persist ``df`` at MEMORY_AND_DISK for a
@@ -3408,51 +3397,114 @@ class LakeTable:
         df = df.persist(StorageLevel.MEMORY_AND_DISK)
         return df, df
 
-    def _merge_cow(
+    def _keyed_rewrite(
         self,
-        source: DataFrame,
-        snap: Snapshot,
+        source: DataFrame | None,
+        deletes: DataFrame | None,
+        mode: str,
         assert_unique_key: bool,
-        txn_app: str | None = None,
-        txn_version: int | None = None,
+        operation: str,
+        txn_app: str | None,
+        txn_version: int | None,
     ) -> Snapshot:
-        self._enforce_constraints(source, "merge")
-        bounds = None
-        if assert_unique_key:
-            # one probe job serves the duplicate-key guard, bucket
-            # pruning, AND dir pruning: per-key counts roll up to a
-            # per-bucket max + the bucket's LEADING-key-column bounds
-            # (≤ n_buckets rows collected). For a composite key the
-            # leading column alone still prunes soundly — a matched row
-            # must equal the batch on EVERY key column, so a dir whose
-            # leading-column range misses the batch's cannot match
-            # (the reference's TB_COMPOSITE_KEY tables get era pruning
-            # this way when the leading column is the time-ordered one).
-            bucket = (
-                bucket_expr(snap.key, snap.n_buckets).alias("b")
-                if snap.n_buckets > 1
-                else F.lit(0).alias("b")
-            )
-            probe = (
-                source.groupBy(*snap.key)
-                .count()
-                .select(bucket, "count", F.col(snap.key[0]).alias("k"))
-                .groupBy("b")
-                .agg(
-                    F.max("count").alias("max_dup"),
-                    F.min("k").alias("kmin"),
-                    F.max("k").alias("kmax"),
-                )
-                .collect()
-            )
-            if any(r.max_dup > 1 for r in probe):
-                raise ValueError(
-                    "MERGE source has duplicate keys; dedup-latest before merging"
-                )
-            affected = sorted(r.b for r in probe)
-            bounds = {r.b: (r.kmin, r.kmax) for r in probe}
+        """The one keyed-DML primitive behind ``merge`` and
+        ``delete_keys``: upsert ``source`` rows and delete ``deletes``
+        keys (either side may be None) in a single commit.
+
+        The batch feeds several consumers in one commit — the probe,
+        the anti-join build side and the union leg (CoW), or the dup
+        probe and the write (MoR) — so it is persisted batch-sized for
+        the commit's duration (size-gated, see ``_persist_batch``) and
+        the caller's upstream pipeline runs once. For CoW, both sides
+        are persisted as ONE frame tagged by ``_DELETE_FLAG``, so the
+        pipeline behind them (a CDC batch's dedup) is evaluated in one
+        cache-building job, not once per consumer and side."""
+        if mode not in ("copy-on-write", "merge-on-read"):
+            raise ValueError(f"unknown {operation} mode {mode!r}")
+        snap = self.snapshot()
+        if not snap.key:
+            raise ValueError(f"{operation} requires a keyed table")
+        if source is not None:
+            source = self._align(source)
+        if deletes is not None:
+            deletes = deletes.select(*snap.key)
+        if mode == "merge-on-read":
+            batch = source
         else:
-            affected = self._affected_buckets(source, snap)
+            legs = []
+            if source is not None:
+                legs.append(source.withColumn(_DELETE_FLAG, F.lit(False)))
+            if deletes is not None:
+                legs.append(deletes.select(
+                    *[(F.col(f.name) if f.name in snap.key else F.lit(None))
+                      .cast(f.dataType).alias(f.name) for f in self.schema().fields],
+                    F.lit(True).alias(_DELETE_FLAG),
+                ))
+            batch = functools.reduce(DataFrame.unionByName, legs)
+        cached = None
+        if batch is not None and (mode == "copy-on-write" or assert_unique_key):
+            batch, cached = self._persist_batch(batch)
+        try:
+            if source is not None:
+                self._enforce_constraints(
+                    batch if mode == "merge-on-read" else _upsert_rows(batch), operation
+                )
+            if mode == "merge-on-read":
+                return self._keyed_mor(snap, batch, deletes, assert_unique_key,
+                                       operation, txn_app, txn_version)
+            return self._keyed_cow(snap, batch, assert_unique_key, operation,
+                                   txn_app, txn_version)
+        finally:
+            if cached is not None:
+                cached.unpersist()
+
+    def _keyed_cow(
+        self,
+        snap: Snapshot,
+        batch: DataFrame,
+        assert_unique_key: bool,
+        operation: str,
+        txn_app: str | None,
+        txn_version: int | None,
+    ) -> Snapshot:
+        """Copy-on-write keyed rewrite of ``batch`` (upsert rows and
+        ``_DELETE_FLAG``-tagged delete keys): one probe, one read of the
+        touched dirs, one bucketed write, one ``_replace_buckets``."""
+        # one probe job serves the duplicate-key guard, bucket pruning,
+        # dir pruning AND the union leg's sizing: per-key upsert counts
+        # roll up to a per-bucket max, row count and LEADING-key-column
+        # bounds (≤ n_buckets rows collected). For a composite key the
+        # leading column alone still prunes soundly — a matched row
+        # must equal the batch on EVERY key column, so a dir whose
+        # leading-column range misses the batch's cannot match (the
+        # reference's TB_COMPOSITE_KEY tables get era pruning this way
+        # when the leading column is the time-ordered one).
+        bucket = (
+            bucket_expr(snap.key, snap.n_buckets)
+            if snap.n_buckets > 1
+            else F.lit(0)
+        )
+        rows = batch.select(*snap.key, (~F.col(_DELETE_FLAG)).cast("long").alias("up"))
+        if assert_unique_key:
+            rows = rows.groupBy(*snap.key).agg(F.sum("up").alias("up"))
+        probe = (
+            rows.groupBy(bucket.alias("b"))
+            .agg(
+                F.max("up").alias("max_dup"),
+                F.sum("up").alias("n_up"),
+                F.min(snap.key[0]).alias("kmin"),
+                F.max(snap.key[0]).alias("kmax"),
+            )
+            .collect()
+        )
+        if assert_unique_key and any(r.max_dup > 1 for r in probe):
+            raise ValueError(
+                "MERGE source has duplicate keys; dedup-latest before merging"
+            )
+        if not probe:
+            return snap  # empty batch: nothing to commit
+        affected = sorted(r.b for r in probe)
+        bounds = {r.b: (r.kmin, r.kmax) for r in probe}
         touched, kept = self._split_dirs_by_key_bounds(snap, affected, bounds)
         if any(snap.deletes.get(b) for b in touched):
             target = self._read_with_deletes(snap, touched)
@@ -3460,26 +3512,22 @@ class LakeTable:
             target = self._read_dirs(
                 [d for ds in touched.values() for d in ds], snap
             )
-        # Right-size the union leg to the batch's actual volume: for a
-        # persisted source the count is one cache-backed job (the probe
-        # already materialized it) and coalesce merges cached blocks
-        # without a shuffle; an unpersisted (size-gated) source pays
-        # one extra evaluation — tolerable exactly because the gate
-        # only skips table-scale batches, where caching costs more. A
-        # CDC-sized batch otherwise fans its union leg out to
-        # scan-parallelism task counts — dozens of near-empty task
-        # launches that also bimodalize the write's map stage (half
-        # heavy rewrite tasks, half trivial batch tasks — the residual
-        # "skew" reading of the r14 sf1 merge capture).
-        n_src = source.count()
-        try:
-            cores = self.spark.sparkContext.defaultParallelism
-        except Exception:  # Spark Connect: no SparkContext handle
-            cores = 32
-        k = max(1, min(cores, -(-n_src // UNION_LEG_ROWS_PER_TASK)))
-        merged = target.join(source, on=snap.key, how="left_anti").unionByName(
-            source.coalesce(k)
-        )
+        merged = target.join(batch.select(*snap.key), on=snap.key, how="left_anti")
+        n_up = sum(r.n_up for r in probe)
+        if n_up:
+            # Right-size the union leg to the batch's actual volume (the
+            # probe counted it): coalesce merges cached blocks without a
+            # shuffle. A CDC-sized batch otherwise fans its union leg out
+            # to scan-parallelism task counts — dozens of near-empty task
+            # launches that also bimodalize the write's map stage (half
+            # heavy rewrite tasks, half trivial batch tasks — the
+            # residual "skew" reading of the r14 sf1 merge capture).
+            try:
+                cores = self.spark.sparkContext.defaultParallelism
+            except Exception:  # Spark Connect: no SparkContext handle
+                cores = 32
+            k = max(1, min(cores, -(-n_up // UNION_LEG_ROWS_PER_TASK)))
+            merged = merged.unionByName(_upsert_rows(batch).coalesce(k))
         new_dirs = self._write_bucketed(merged, snap.key, snap.n_buckets)
         per_bucket = {
             str(b): kept.get(str(b), []) + new_dirs.get(str(b), []) for b in affected
@@ -3488,7 +3536,7 @@ class LakeTable:
             snap,
             per_bucket,
             affected,
-            "merge",
+            operation,
             {
                 "affected_buckets": affected,
                 "pruned_dirs": sum(len(v) for v in kept.values()),
@@ -3564,85 +3612,35 @@ class LakeTable:
         deletes as anti-joins until ``rewrite_position_delete_files``
         folds them in (Iceberg's ``write.delete.mode`` choice; the
         reference schedules the fold via ``position_delete_interval``,
-        ``src/utils/cdc_pipeline.py:421-425``)."""
+        ``src/utils/cdc_pipeline.py:421-425``). Both are ``merge`` with
+        an empty upsert side; an empty key set makes no commit."""
         done = self._txn_applied(txn_app, txn_version)
         if done is not None:
             return done
-        if mode == "merge-on-read":
-            return self._delete_keys_mor(keys_df, txn_app=txn_app,
-                                         txn_version=txn_version)
-        if mode != "copy-on-write":
-            raise ValueError(f"unknown delete mode {mode!r}")
-        snap = self.snapshot()
-        if not snap.key:
-            raise ValueError("delete_keys requires a keyed table")
-        keys_df = keys_df.select(*snap.key).distinct()
-        # one probe job: affected buckets + per-bucket LEADING-key
-        # bounds for dir-level pruning (see _split_dirs_by_key_bounds;
-        # sound for composite keys — equality on every key column
-        # implies leading-column range intersection)
-        bucket = (
-            bucket_expr(snap.key, snap.n_buckets).alias("b")
-            if snap.n_buckets > 1
-            else F.lit(0).alias("b")
-        )
-        probe = (
-            keys_df.select(bucket, F.col(snap.key[0]).alias("k"))
-            .groupBy("b")
-            .agg(F.min("k").alias("kmin"), F.max("k").alias("kmax"))
-            .collect()
-        )
-        affected = sorted(r.b for r in probe)
-        bounds = {r.b: (r.kmin, r.kmax) for r in probe}
-        touched, kept = self._split_dirs_by_key_bounds(snap, affected, bounds)
-        if any(snap.deletes.get(b) for b in touched):
-            target = self._read_with_deletes(snap, touched)
-        else:
-            target = self._read_dirs(
-                [d for ds in touched.values() for d in ds], snap
-            )
-        remaining = target.join(keys_df, on=snap.key, how="left_anti")
-        new_dirs = self._write_bucketed(remaining, snap.key, snap.n_buckets)
-        per_bucket = {
-            str(b): kept.get(str(b), []) + new_dirs.get(str(b), []) for b in affected
-        }
-        return self._replace_buckets(
-            snap,
-            per_bucket,
-            affected,
-            "delete",
-            {
-                "affected_buckets": affected,
-                "pruned_dirs": sum(len(v) for v in kept.values()),
-                "rewritten_dirs": sum(len(v) for v in touched.values()),
-            },
-            txn_app=txn_app,
-            txn_version=txn_version,
-        )
+        return self._keyed_rewrite(None, keys_df, mode, False, "delete",
+                                   txn_app, txn_version)
 
-    def _merge_mor(self, source: DataFrame, assert_unique_key: bool = True,
-                   txn_app: str | None = None,
-                   txn_version: int | None = None) -> Snapshot:
-        """Merge-on-read MERGE: write the batch once as new data dirs;
-        the same dirs serve as the equality-delete key source (the
-        delete reader projects just the key columns), with ``covers``
-        limited to the dirs live at commit time so the batch's own rows
-        are never masked. Concurrent commits rebase like
-        ``_delete_keys_mor``: a dir appended between snapshot and commit
-        is covered too (newest-key-wins, same stance as MoR delete)."""
-        snap = self.snapshot()
-        if not snap.key:
-            raise ValueError("merge requires a keyed table")
-        # same policy (and size gate) as the CoW path: when the dup
-        # probe will consume the source before the write does, persist
-        # batch-sized for the commit's duration so the caller's
-        # upstream pipeline runs once
-        source = self._align(source)
-        cached = None
-        if assert_unique_key:
-            source, cached = self._persist_batch(source)
-        try:
-            self._enforce_constraints(source, "merge")
+    def _keyed_mor(
+        self,
+        snap: Snapshot,
+        source: DataFrame | None,
+        deletes: DataFrame | None,
+        assert_unique_key: bool,
+        operation: str,
+        txn_app: str | None,
+        txn_version: int | None,
+    ) -> Snapshot:
+        """Merge-on-read keyed DML: write the upserts once as new data
+        dirs and the delete keys as bucket-partitioned equality-delete
+        dirs, then ONE commit in which every new delete entry — the
+        upsert dirs double as the key source of their own era, the
+        delete reader projects just the key columns — covers exactly the
+        parent's live dirs of its bucket, so the batch's own rows are
+        never masked (hence the source wins over a delete of the same
+        key). Concurrent commits rebase: a dir appended between snapshot
+        and commit is covered too (newest-key-wins)."""
+        new_dirs: dict[str, list[str]] = {}
+        if source is not None:
             if assert_unique_key:
                 dup = (
                     source.groupBy(*snap.key)
@@ -3656,81 +3654,43 @@ class LakeTable:
                         "MERGE source has duplicate keys; dedup-latest before merging"
                     )
             new_dirs = self._write_bucketed(source, snap.key, snap.n_buckets)
-        finally:
-            if cached is not None:
-                cached.unpersist()
+        del_dirs = (
+            self._write_bucketed(deletes, snap.key, snap.n_buckets)
+            if deletes is not None else {}
+        )
+        if not new_dirs and not del_dirs:
+            return snap  # empty batch: nothing to commit
 
         def build(parent):
-            deletes = {b: list(entries) for b, entries in parent.deletes.items()}
+            eras = {b: list(entries) for b, entries in parent.deletes.items()}
             buckets = {b: list(d) for b, d in parent.buckets.items()}
-            touched = []
-            for b, dirs in new_dirs.items():
+            touched = set()
+            for b in set(new_dirs) | set(del_dirs):
                 covers = list(parent.buckets.get(b, []))
-                for d in dirs:
-                    if covers:
-                        deletes.setdefault(b, []).append(
-                            {"dir": d, "covers": covers}
-                        )
-                buckets.setdefault(b, [])
-                buckets[b] = buckets[b] + dirs
-                touched.append(int(b))
+                if covers:  # no live data: nothing for this bucket to mask
+                    for d in new_dirs.get(b, []) + del_dirs.get(b, []):
+                        eras.setdefault(b, []).append({"dir": d, "covers": covers})
+                    touched.add(int(b))
+                if b in new_dirs:
+                    buckets[b] = buckets.get(b, []) + new_dirs[b]
+                    touched.add(int(b))
             return Snapshot(
                 version=parent.version + 1,
                 parent=parent.version,
                 timestamp=_utcnow(),
-                operation="merge-mor",
+                operation=f"{operation}-mor",
                 schema_json=parent.schema_json,
                 key=parent.key,
                 n_buckets=parent.n_buckets,
                 buckets=buckets,
                 properties=parent.properties,
-                summary={
-                    "affected_buckets": sorted(touched),
-                    "mode": "merge-on-read",
-                },
-                deletes=deletes,
-                renames=parent.renames,
-            )
-
-        return self._commit(build, "merge-mor", txn_app=txn_app, txn_version=txn_version)
-
-    def _delete_keys_mor(self, keys_df: DataFrame,
-                         txn_app: str | None = None,
-                         txn_version: int | None = None) -> Snapshot:
-        """Merge-on-read DELETE: bucket-partitioned equality-delete files,
-        each covering exactly the data dirs live at commit time."""
-        snap = self.snapshot()
-        if not snap.key:
-            raise ValueError("delete_keys requires a keyed table")
-        keys_df = keys_df.select(*snap.key).distinct()
-        new_dirs = self._write_bucketed(keys_df, snap.key, snap.n_buckets)
-
-        def build(parent):
-            deletes = {b: list(entries) for b, entries in parent.deletes.items()}
-            touched = []
-            for b, dirs in new_dirs.items():
-                covers = parent.buckets.get(b, [])
-                if not covers:
-                    continue  # no data to delete in this bucket
-                for d in dirs:
-                    deletes.setdefault(b, []).append({"dir": d, "covers": list(covers)})
-                touched.append(int(b))
-            return Snapshot(
-                version=parent.version + 1,
-                parent=parent.version,
-                timestamp=_utcnow(),
-                operation="delete-mor",
-                schema_json=parent.schema_json,
-                key=parent.key,
-                n_buckets=parent.n_buckets,
-                buckets={b: list(d) for b, d in parent.buckets.items()},
-                properties=parent.properties,
                 summary={"affected_buckets": sorted(touched), "mode": "merge-on-read"},
-                deletes=deletes,
+                deletes=eras,
                 renames=parent.renames,
             )
 
-        return self._commit(build, "delete-mor", txn_app=txn_app, txn_version=txn_version)
+        return self._commit(build, f"{operation}-mor", txn_app=txn_app,
+                            txn_version=txn_version)
 
     def delete_where(self, condition, mode: str = "copy-on-write") -> Snapshot:
         """Predicate delete (the reference's retention purge shape,
@@ -3933,7 +3893,7 @@ class LakeTable:
         ``mode="merge-on-read"`` (keyed tables; Iceberg's
         ``write.update.mode`` choice): only the MATCHED rows are
         written, as new data dirs that double as the equality-delete
-        key source masking their old versions (the ``_merge_mor``
+        key source masking their old versions (the ``_keyed_mor``
         layout) with ``covers`` = exactly the touched dirs — commit
         cost is the pruned scan + O(matched rows), never a rewrite; a
         backfill touching 0.1% of a 100 TB table moves 0.1% of the
@@ -4021,7 +3981,7 @@ class LakeTable:
         """Merge-on-read predicate UPDATE: one pruned scan selects the
         matched rows, the assignments apply to THOSE rows only, and
         they commit as new data dirs that double as the equality-delete
-        key source (the ``_merge_mor`` layout) with ``covers`` =
+        key source (the ``_keyed_mor`` layout) with ``covers`` =
         exactly the touched dirs. See ``update_where`` for semantics."""
         if not snap.key:
             raise ValueError("merge-on-read update_where requires a keyed table")

@@ -139,3 +139,96 @@ def test_batch_stats(spark):
     )
     s = batch_stats(df)
     assert s.event_count == 2 and s.min_offset == 3 and s.max_offset == 7
+
+
+# One batch per case: (op, id, value, offset, ts_ms) events against the
+# ten base rows id 0..9 of the ``target`` fixture.
+PARITY_BATCHES = {
+    "mixed": [
+        ("c", 100, "ins100", 1, 1),
+        ("u", 1, "upd1-a", 2, 2),
+        ("u", 1, "upd1-b", 3, 3),
+        ("d", 2, "x", 4, 4),
+        ("c", 101, "ins101", 5, 5),
+        ("d", 101, "x", 6, 6),  # inserted then deleted in the same batch
+        ("u", 3, "upd3", 7, 7),
+        ("d", 4, "x", 8, 8),
+    ],
+    "delete_absent": [("d", 500, "x", 1, 1), ("u", 5, "upd5", 2, 2)],
+    "upserts_only": [("c", 102, "ins102", 1, 1), ("u", 6, "upd6", 2, 2)],
+    "deletes_only": [("d", 7, "x", 1, 1), ("d", 8, "x", 2, 2)],
+    "empty": [],
+}
+
+
+def _merge_then_delete(state: dict, events) -> dict:
+    """The two-commit order, replayed in Python: dedup-latest per key,
+    MERGE the upserts, then DELETE the delete-set."""
+    latest = {}
+    for op, id_, val, _, _ in sorted(events, key=lambda e: e[3]):
+        latest[id_] = (op, val)
+    state = dict(state)
+    state.update({i: v for i, (op, v) in latest.items() if op != "d"})
+    for i, (op, _) in latest.items():
+        if op == "d":
+            state.pop(i, None)
+    return state
+
+
+@pytest.mark.parametrize("mode", ["copy-on-write", "merge-on-read"])
+@pytest.mark.parametrize("case", sorted(PARITY_BATCHES))
+def test_fused_apply_matches_merge_then_delete(spark, target, mode, case):
+    """The one-commit apply equals MERGE-then-DELETE; an empty batch
+    makes no commit."""
+    events = PARITY_BATCHES[case]
+    before = {r.id: r.v for r in target.read().collect()}
+    v0 = target.current_version()
+    u, d = transform_and_dedup(make_env(spark, events), target, ["id"])
+    apply_cdc_changes(target, u, d, mode=mode)
+    assert {r.id: r.v for r in target.read().collect()} == _merge_then_delete(before, events)
+    assert target.current_version() == v0 + (1 if events else 0)
+
+
+@pytest.mark.parametrize("mode", ["copy-on-write", "merge-on-read"])
+def test_merge_with_deletes_source_wins(spark, target, mode):
+    """A key both upserted and deleted in one ``merge`` is upserted."""
+    src = target.read().where("id IN (1, 2)").withColumn("v", F.lit("new"))
+    dels = target.read().where("id IN (2, 3)").select(SURROGATE_KEY_COL)
+    target.merge(src, deletes=dels, mode=mode)
+    got = {r.id: r.v for r in target.read().collect()}
+    assert got[1] == got[2] == "new"
+    assert 3 not in got and len(got) == 9
+
+
+def test_mor_batch_delete_entries_share_covers(spark, tmp_path):
+    """A merge-on-read batch's upsert and delete entries cover the same
+    pre-commit dirs, so reads apply the batch as one anti-join."""
+    from datalake_iceberg_spark.tables import bucket_expr
+
+    cat = LakeCatalog(spark, str(tmp_path / "wh"))
+    t = cat.create_or_replace(
+        "db.shared", spark.createDataFrame([Row(id=i, v=f"v{i}") for i in range(40)]),
+        key=["id"], n_buckets=4,
+    )
+    # one upserted and one deleted key in every bucket
+    by_bucket: dict[int, list[int]] = {}
+    for r in t.read().select("id", bucket_expr(["id"], 4).alias("b")).collect():
+        by_bucket.setdefault(r.b, []).append(r.id)
+    ups = [sorted(ids)[0] for ids in by_bucket.values()]
+    dels = [sorted(ids)[1] for ids in by_bucket.values()]
+    before = t.snapshot()
+    t.merge(
+        spark.createDataFrame([Row(id=i, v="new") for i in ups]),
+        deletes=spark.createDataFrame([Row(id=i) for i in dels]),
+        mode="merge-on-read",
+    )
+    snap = t.snapshot()
+    assert snap.version == before.version + 1
+    for b, entries in snap.deletes.items():
+        new = [e for e in entries if e not in before.deletes.get(b, [])]
+        assert len(new) == 2
+        assert all(e["covers"] == before.buckets[b] for e in new)
+    plan = t.read()._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("LeftAnti") == 1
+    got = {r.id: r.v for r in t.read().collect()}
+    assert got == {i: ("new" if i in ups else f"v{i}") for i in range(40) if i not in dels}

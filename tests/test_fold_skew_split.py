@@ -74,3 +74,16 @@ def test_fold_without_byte_stats_degrades_to_uniform(spark, catalog, monkeypatch
     out = t.rewrite_position_delete_files()
     assert out["rewritten_buckets"] >= 1
     assert t.read().count() == n0 - n_del
+
+
+def test_weighted_write_drops_after_sort_columns(spark, catalog):
+    """The weight-aware write path honours ``drop_after_sort`` like the
+    uniform one: synthetic columns never reach the data files."""
+    t, _ = _mk_uneven_table(spark, catalog)
+    staged = t.read().withColumn("_z", F.col("v") * 2)
+    out = t._write_bucketed(staged, ["k"], 4, drop_after_sort=["_z"],
+                            bucket_weights={0: 1000, 1: 100, 2: 100, 3: 100})
+    assert out
+    for dirs in out.values():
+        for rel in dirs:
+            assert spark.read.parquet(os.path.join(t.location, rel)).columns == ["k", "v"]

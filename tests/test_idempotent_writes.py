@@ -5,6 +5,7 @@ import pytest
 from pyspark.sql import Row
 
 from datalake_iceberg_spark.cdc.pipeline import apply_cdc_changes
+from datalake_iceberg_spark.functions.keys import SURROGATE_KEY_COL
 from datalake_iceberg_spark.tables import LakeCatalog
 
 # r16 (VERDICT item 2): heavy lifecycle/stress coverage lives in the
@@ -85,22 +86,59 @@ def test_txn_app_requires_version(catalog, spark):
         t.append(spark.createDataFrame([Row(id=100, v=1.0)]), txn_app="a")
 
 
-def test_apply_cdc_changes_replay(catalog, spark):
-    """One replayed micro-batch skips merge AND delete independently."""
-    from datalake_iceberg_spark.functions.keys import SURROGATE_KEY_COL
-
+def _cdc_batch(catalog, spark):
+    """(table, upserts, deletes): 10 rows k0..k9; upsert k1, delete k2."""
     df = spark.createDataFrame(
         [Row(**{SURROGATE_KEY_COL: f"k{i}", "v": float(i)}) for i in range(10)]
     )
     t = catalog.create_or_replace("db.cdc", df, key=[SURROGATE_KEY_COL], n_buckets=2)
     ups = spark.createDataFrame([Row(**{SURROGATE_KEY_COL: "k1", "v": 42.0})])
     dels = spark.createDataFrame([Row(**{SURROGATE_KEY_COL: "k2"})])
+    return t, ups, dels
+
+
+def _assert_batch_applied(t):
+    got = {r[SURROGATE_KEY_COL]: r.v for r in t.read().collect()}
+    assert "k2" not in got and got["k1"] == 42.0 and len(got) == 9
+
+
+def test_apply_cdc_changes_replay(catalog, spark):
+    """One micro-batch is one commit under one marker; its replay is a no-op."""
+    t, ups, dels = _cdc_batch(catalog, spark)
+    v0 = t.current_version()
     apply_cdc_changes(t, ups, dels, txn_app="cdc:topic", txn_version=3)
-    v = t.current_version()
+    assert t.current_version() == v0 + 1
+    assert t.snapshot().properties["txn.cdc:topic"] == "3"
     apply_cdc_changes(t, ups, dels, txn_app="cdc:topic", txn_version=3)  # replay
+    assert t.current_version() == v0 + 1
+    _assert_batch_applied(t)
+    # the NEXT batch id applies, again as exactly one commit
+    apply_cdc_changes(t, spark.createDataFrame([Row(**{SURROGATE_KEY_COL: "k3", "v": 7.0})]),
+                      dels.limit(0), txn_app="cdc:topic", txn_version=4)
+    assert t.current_version() == v0 + 2
+
+
+def test_apply_cdc_changes_replays_half_applied_legacy_batch(catalog, spark):
+    """The earlier two-commit scheme crashed after its MERGE: only the
+    ``:upsert`` marker is at the batch id, so the replay re-applies the
+    whole batch and the delete lands."""
+    t, ups, dels = _cdc_batch(catalog, spark)
+    t.merge(ups, assert_unique_key=False, txn_app="cdc:topic:upsert", txn_version=3)
+    v = t.current_version()
+    apply_cdc_changes(t, ups, dels, txn_app="cdc:topic", txn_version=3)
+    assert t.current_version() == v + 1
+    _assert_batch_applied(t)
+
+
+def test_apply_cdc_changes_skips_fully_applied_legacy_batch(catalog, spark):
+    """Both legacy markers at the batch id: the replay makes no version."""
+    t, ups, dels = _cdc_batch(catalog, spark)
+    t.merge(ups, assert_unique_key=False, txn_app="cdc:topic:upsert", txn_version=3)
+    t.delete_keys(dels, txn_app="cdc:topic:delete", txn_version=3)
+    v = t.current_version()
+    apply_cdc_changes(t, ups, dels, txn_app="cdc:topic", txn_version=3)
     assert t.current_version() == v
-    assert t.read().count() == 9
-    assert {r.v for r in t.read().where(f"{SURROGATE_KEY_COL} = 'k1'").collect()} == {42.0}
+    _assert_batch_applied(t)
 
 
 def test_quarantine_invalid_splits_and_parks(catalog, spark):
