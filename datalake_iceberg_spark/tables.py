@@ -610,6 +610,38 @@ class Snapshot:
         return [e["dir"] for entries in self.deletes.values() for e in entries]
 
 
+def _successor(parent: Snapshot, operation: str, **changes) -> Snapshot:
+    """The commit after ``parent``: its schema, layout, properties,
+    delete eras and renames carry over unless ``changes`` replaces
+    them. Stats, NDV pointers and history stay empty here —
+    ``_finalize_snapshot`` derives them from the parent."""
+    fields = dict(
+        schema_json=parent.schema_json, key=parent.key,
+        n_buckets=parent.n_buckets, buckets=parent.buckets,
+        properties=parent.properties, summary={},
+        deletes=parent.deletes, renames=parent.renames,
+    )
+    fields.update(changes)
+    return Snapshot(version=parent.version + 1, parent=parent.version,
+                    timestamp=_utcnow(), operation=operation, **fields)
+
+
+def _content_of(snap: Snapshot) -> dict[str, Any]:
+    """A deep copy of ``snap``'s table content (schema, layout,
+    properties, delete eras, renames) for a commit that adopts it
+    (rollback, fork, fast_forward) or edits it in place (DDL)."""
+    return dict(
+        schema_json=snap.schema_json, key=snap.key, n_buckets=snap.n_buckets,
+        buckets={b: list(d) for b, d in snap.buckets.items()},
+        properties=dict(snap.properties),
+        deletes={
+            b: [{"dir": e["dir"], "covers": list(e["covers"])} for e in es]
+            for b, es in snap.deletes.items()
+        },
+        renames={d: dict(m) for d, m in snap.renames.items()},
+    )
+
+
 class _AlreadyApplied(Exception):
     """Internal: a transactional write (txn_app, txn_version) was
     already committed — carry the snapshot that proves it."""
@@ -2630,9 +2662,7 @@ class LakeTable:
         through here (merge/delete) always sees post-delete state."""
         snap = self.snapshot(version)
         wanted = {str(b): snap.buckets.get(str(b), []) for b in bucket_ids}
-        if any(snap.deletes.get(b) for b in wanted):
-            return self._read_with_deletes(snap, wanted)
-        return self._read_dirs([d for ds in wanted.values() for d in ds], snap)
+        return self._read_with_deletes(snap, wanted)
 
     def snapshots(self) -> DataFrame:
         """Metadata table, like Iceberg's ``table.snapshots``."""
@@ -2782,23 +2812,8 @@ class LakeTable:
         self._pending_stats.update(target.stats)
 
         def build(parent):
-            return Snapshot(
-                version=parent.version + 1,
-                parent=parent.version,
-                timestamp=_utcnow(),
-                operation="rollback",
-                schema_json=target.schema_json,
-                key=target.key,
-                n_buckets=target.n_buckets,
-                buckets={b: list(d) for b, d in target.buckets.items()},
-                properties=dict(target.properties),
-                summary={"rolled_back_to": version},
-                deletes={
-                    b: [{"dir": e["dir"], "covers": list(e["covers"])} for e in es]
-                    for b, es in target.deletes.items()
-                },
-                renames={d: dict(m) for d, m in target.renames.items()},
-            )
+            return _successor(parent, "rollback", summary={"rolled_back_to": version},
+                              **_content_of(target))
 
         return self._commit(build, "rollback")
 
@@ -2909,19 +2924,9 @@ class LakeTable:
             merged = {b: list(dirs) for b, dirs in parent.buckets.items()}
             for b, dirs in doc["buckets"].items():
                 merged.setdefault(b, []).extend(dirs)
-            return Snapshot(
-                version=parent.version + 1,
-                parent=parent.version,
-                timestamp=_utcnow(),
-                operation="publish",
-                schema_json=parent.schema_json,
-                key=parent.key,
-                n_buckets=parent.n_buckets,
-                buckets=merged,
-                properties=parent.properties,
+            return _successor(
+                parent, "publish", buckets=merged,
                 summary={"wap_id": wap_id, "base_version": doc["base_version"]},
-                deletes=parent.deletes,
-                renames=parent.renames,
             )
 
         snap = self._commit(build, "publish")
@@ -2969,23 +2974,9 @@ class LakeTable:
         br._pending_stats.update(base.stats)
 
         def build(parent):
-            return Snapshot(
-                version=0,
-                parent=None,
-                timestamp=_utcnow(),
-                operation="fork",
-                schema_json=base.schema_json,
-                key=base.key,
-                n_buckets=base.n_buckets,
-                buckets={b: list(d) for b, d in base.buckets.items()},
-                properties=dict(base.properties),
-                summary={"forked_from": v},
-                deletes={
-                    b: [{"dir": e["dir"], "covers": list(e["covers"])} for e in es]
-                    for b, es in base.deletes.items()
-                },
-                renames={d: dict(m) for d, m in base.renames.items()},
-            )
+            return Snapshot(version=0, parent=None, timestamp=_utcnow(),
+                            operation="fork", summary={"forked_from": v},
+                            **_content_of(base))
 
         br._commit(build, "fork")
         # fork base lives in its own file (not the v0 summary) so
@@ -3037,22 +3028,10 @@ class LakeTable:
                     f"branch forked from v{fork_base} — re-fork to pick up "
                     f"the intervening main commits"
                 )
-            return Snapshot(
-                version=parent.version + 1,
-                parent=parent.version,
-                timestamp=_utcnow(),
-                operation="fast_forward",
-                schema_json=head.schema_json,
-                key=head.key,
-                n_buckets=head.n_buckets,
-                buckets={b: list(d) for b, d in head.buckets.items()},
-                properties=dict(head.properties),
+            return _successor(
+                parent, "fast_forward",
                 summary={"fast_forward_from": name, "branch_head": head.version},
-                deletes={
-                    b: [{"dir": e["dir"], "covers": list(e["covers"])} for e in es]
-                    for b, es in head.deletes.items()
-                },
-                renames={d: dict(m) for d, m in head.renames.items()},
+                **_content_of(head),
             )
 
         return self._commit(build, "fast_forward")
@@ -3110,22 +3089,9 @@ class LakeTable:
             merged = {b: list(dirs) for b, dirs in parent.buckets.items()}
             for b, dirs in new.items():
                 merged.setdefault(b, []).extend(dirs)
-            return Snapshot(
-                version=parent.version + 1,
-                parent=parent.version,
-                timestamp=_utcnow(),
-                operation="append",
-                schema_json=parent.schema_json,
-                key=parent.key,
-                n_buckets=parent.n_buckets,
-                buckets=merged,
-                properties=parent.properties,
-                summary={},
-                # appended dirs are NOT covered by existing deletes
-                # (covers pins them to their commit era), carry as-is
-                deletes=parent.deletes,
-                renames=parent.renames,
-            )
+            # appended dirs are NOT covered by existing deletes (covers
+            # pins them to their commit era), so the eras carry as-is
+            return _successor(parent, "append", buckets=merged)
 
         return self._commit(build, "append", txn_app=txn_app, txn_version=txn_version)
 
@@ -3285,21 +3251,11 @@ class LakeTable:
             merged = {b: dirs for b, dirs in parent.buckets.items() if b not in affected_s}
             for b, dirs in per_bucket.items():
                 merged[b] = dirs
-            return Snapshot(
-                version=parent.version + 1,
-                parent=parent.version,
-                timestamp=_utcnow(),
-                operation=operation,
-                schema_json=parent.schema_json,
-                key=parent.key,
-                n_buckets=parent.n_buckets,
-                buckets=merged,
-                properties=parent.properties,
-                summary=summary,
+            return _successor(
+                parent, operation, buckets=merged, summary=summary,
                 # CoW rewrites replace the covered dirs, so delete
                 # entries whose covers vanished are dropped here
                 deletes=_prune_deletes(parent.deletes, merged),
-                renames=parent.renames,
             )
 
         return self._commit(build, operation, txn_app=txn_app, txn_version=txn_version)
@@ -3468,8 +3424,9 @@ class LakeTable:
         txn_version: int | None,
     ) -> Snapshot:
         """Copy-on-write keyed rewrite of ``batch`` (upsert rows and
-        ``_DELETE_FLAG``-tagged delete keys): one probe, one read of the
-        touched dirs, one bucketed write, one ``_replace_buckets``."""
+        ``_DELETE_FLAG``-tagged delete keys): one probe, then the shared
+        CoW tail (``_cow_rewrite``) with ``target ⟕anti batch keys ∪
+        upserts`` as its row transform."""
         # one probe job serves the duplicate-key guard, bucket pruning,
         # dir pruning AND the union leg's sizing: per-key upsert counts
         # roll up to a per-bucket max, row count and LEADING-key-column
@@ -3503,18 +3460,23 @@ class LakeTable:
             )
         if not probe:
             return snap  # empty batch: nothing to commit
-        affected = sorted(r.b for r in probe)
-        bounds = {r.b: (r.kmin, r.kmax) for r in probe}
-        touched, kept = self._split_dirs_by_key_bounds(snap, affected, bounds)
-        if any(snap.deletes.get(b) for b in touched):
-            target = self._read_with_deletes(snap, touched)
-        else:
-            target = self._read_dirs(
-                [d for ds in touched.values() for d in ds], snap
-            )
-        merged = target.join(batch.select(*snap.key), on=snap.key, how="left_anti")
+        # On a time-ordered key (the CDC common case: recent keys churn,
+        # old keys are cold) the per-bucket key-range predicate turns a
+        # bucket-wide rewrite into one proportional to the hot dirs. A
+        # bucket whose batch keys are all NULL has no bounds: every dir
+        # is touched (the pre-pruning, full-bucket rewrite).
+        kcol = snap.key[0]
+        touched, kept = self._split_dirs(snap, {
+            str(r.b): None if r.kmin is None or r.kmax is None
+            else [_norm_filters([(kcol, ">=", r.kmin), (kcol, "<=", r.kmax)])]
+            for r in sorted(probe, key=lambda r: r.b)
+        })
         n_up = sum(r.n_up for r in probe)
-        if n_up:
+
+        def upsert(target: DataFrame) -> DataFrame:
+            merged = target.join(batch.select(*snap.key), on=snap.key, how="left_anti")
+            if not n_up:
+                return merged
             # Right-size the union leg to the batch's actual volume (the
             # probe counted it): coalesce merges cached blocks without a
             # shuffle. A CDC-sized batch otherwise fans its union leg out
@@ -3527,10 +3489,66 @@ class LakeTable:
             except Exception:  # Spark Connect: no SparkContext handle
                 cores = 32
             k = max(1, min(cores, -(-n_up // UNION_LEG_ROWS_PER_TASK)))
-            merged = merged.unionByName(_upsert_rows(batch).coalesce(k))
-        new_dirs = self._write_bucketed(merged, snap.key, snap.n_buckets)
+            return merged.unionByName(_upsert_rows(batch).coalesce(k))
+
+        return self._cow_rewrite(snap, touched, kept, upsert, operation, {},
+                                 txn_app, txn_version)
+
+    def _split_dirs(
+        self, snap: Snapshot, preds: dict[str, list[list[tuple]] | None],
+    ) -> tuple[dict[str, list[str]], dict[str, list[str]]]:
+        """Dir-level data skipping on the WRITE path (the Iceberg
+        file-level min/max pruning analogue): split the dirs of each
+        bucket in ``preds`` into ``(touched, kept)``. A dir is touched
+        when its harvested footer stats may satisfy the bucket's
+        normalized DNF predicate (``None`` touches every dir); a kept
+        dir cannot hold a matching row, so DML carries it into the new
+        snapshot unread and a narrow DML costs ∝ the dirs it can touch,
+        not the history a bucket has accumulated. Conservative by
+        construction: missing footer stats or incomparable types mean
+        "touched"."""
+        touched: dict[str, list[str]] = {}
+        kept: dict[str, list[str]] = {}
+        for bs, dnf in preds.items():
+            touched[bs], kept[bs] = [], []
+            for d in snap.buckets.get(bs, []):
+                hit = dnf is None or self._dir_may_match_dnf(
+                    snap.stats.get(d, {}), dnf, snap.renames.get(d)
+                )
+                (touched if hit else kept)[bs].append(d)
+        return touched, kept
+
+    def _cow_rewrite(
+        self,
+        snap: Snapshot,
+        touched: dict[str, list[str]],
+        kept: dict[str, list[str]],
+        transform,
+        operation: str,
+        summary: dict[str, Any],
+        txn_app: str | None = None,
+        txn_version: int | None = None,
+    ) -> Snapshot:
+        """The copy-on-write tail of every DML: read the ``touched`` dirs
+        (live delete eras applied), ``transform`` the rows, write them
+        bucketed, and replace each affected bucket with its ``kept``
+        dirs plus the new ones. Affected = touched ∪ written buckets: a
+        bucket that receives rows without being touched (an UPDATE that
+        moves a key across buckets) keeps all of its dirs. ``kept`` has
+        exactly the buckets of ``touched``; nothing touched commits a
+        no-op version."""
+        new_dirs = (
+            self._write_bucketed(
+                transform(self._read_with_deletes(snap, touched)),
+                snap.key, snap.n_buckets,
+            )
+            if touched else {}
+        )
+        affected = sorted({int(b) for b in touched} | {int(b) for b in new_dirs})
         per_bucket = {
-            str(b): kept.get(str(b), []) + new_dirs.get(str(b), []) for b in affected
+            str(b): kept.get(str(b), snap.buckets.get(str(b), []))
+            + new_dirs.get(str(b), [])
+            for b in affected
         }
         return self._replace_buckets(
             snap,
@@ -3538,6 +3556,7 @@ class LakeTable:
             affected,
             operation,
             {
+                **summary,
                 "affected_buckets": affected,
                 "pruned_dirs": sum(len(v) for v in kept.values()),
                 "rewritten_dirs": sum(len(v) for v in touched.values()),
@@ -3545,59 +3564,6 @@ class LakeTable:
             txn_app=txn_app,
             txn_version=txn_version,
         )
-
-    def _split_dirs_by_key_bounds(
-        self,
-        snap: Snapshot,
-        affected: list[int],
-        bounds: dict[int, tuple] | None,
-    ) -> tuple[dict[str, list[str]], dict[str, list[str]]]:
-        """Dir-level data skipping for keyed DML (the Iceberg
-        file-level min/max pruning analogue, applied to the WRITE path):
-        within each affected bucket, a data dir whose harvested key
-        min/max range cannot intersect the source batch's per-bucket key
-        bounds contains no matched rows — it is carried into the new
-        snapshot untouched, and only intersecting dirs are read and
-        rewritten. On a time-ordered key (the CDC common case: recent
-        keys churn, old keys are cold) this turns a bucket-wide CoW
-        rewrite into one proportional to the hot dirs, independent of
-        how much history the bucket has accumulated.
-
-        For composite keys the bounds cover the LEADING key column —
-        sound (a matched row equals the batch on every key column, so
-        leading-column ranges must intersect) and effective whenever
-        the leading column is the time-ordered one. Conservative by
-        construction: absent bounds, missing footer stats, or
-        incomparable types all degrade to "touched" (= the pre-pruning
-        behavior, full-bucket rewrite). Returns ``(touched, kept)``
-        dir-lists per bucket string id."""
-        touched: dict[str, list[str]] = {}
-        kept: dict[str, list[str]] = {}
-        kcol = snap.key[0] if snap.key else None
-        for b in affected:
-            bs = str(b)
-            dirs = snap.buckets.get(bs, [])
-            if (
-                bounds is None
-                or b not in bounds
-                or bounds[b][0] is None
-                or bounds[b][1] is None
-            ):
-                touched[bs], kept[bs] = list(dirs), []
-                continue
-            kmin, kmax = bounds[b]
-            filters = _norm_filters([(kcol, ">=", kmin), (kcol, "<=", kmax)])
-            t: list[str] = []
-            k: list[str] = []
-            for d in dirs:
-                if self._dir_may_match(
-                    snap.stats.get(d, {}), filters, snap.renames.get(d)
-                ):
-                    t.append(d)
-                else:
-                    k.append(d)
-            touched[bs], kept[bs] = t, k
-        return touched, kept
 
     def delete_keys(self, keys_df: DataFrame, mode: str = "copy-on-write",
                     txn_app: str | None = None,
@@ -3632,7 +3598,7 @@ class LakeTable:
     ) -> Snapshot:
         """Merge-on-read keyed DML: write the upserts once as new data
         dirs and the delete keys as bucket-partitioned equality-delete
-        dirs, then ONE commit in which every new delete entry — the
+        dirs, then ONE era commit in which every new delete entry — the
         upsert dirs double as the key source of their own era, the
         delete reader projects just the key columns — covers exactly the
         parent's live dirs of its bucket, so the batch's own rows are
@@ -3660,120 +3626,216 @@ class LakeTable:
         )
         if not new_dirs and not del_dirs:
             return snap  # empty batch: nothing to commit
+        return self._era_commit(
+            new_dirs, del_dirs, lambda parent: parent.buckets,
+            f"{operation}-mor", {"mode": "merge-on-read"}, txn_app, txn_version,
+        )
+
+    def _era_commit(
+        self,
+        new_data: dict[str, list[str]],
+        new_deletes: dict[str, list[str]],
+        covers,
+        operation: str,
+        summary: dict[str, Any],
+        txn_app: str | None = None,
+        txn_version: int | None = None,
+    ) -> Snapshot:
+        """The merge-on-read commit of every DML: append the ``new_data``
+        dirs to their buckets, and register each new data or delete-only
+        dir of a bucket as an equality-delete entry whose ``covers`` is
+        ``covers(parent)[bucket]`` — the dirs whose older rows its keys
+        mask. ``covers`` runs against the parent of every commit
+        attempt, so it may also validate that parent (raising
+        ``CommitConflict``). A bucket with nothing covered gets no
+        entry: there are no rows for it to mask."""
 
         def build(parent):
+            cover = covers(parent)
             eras = {b: list(entries) for b, entries in parent.deletes.items()}
             buckets = {b: list(d) for b, d in parent.buckets.items()}
-            touched = set()
-            for b in set(new_dirs) | set(del_dirs):
-                covers = list(parent.buckets.get(b, []))
-                if covers:  # no live data: nothing for this bucket to mask
-                    for d in new_dirs.get(b, []) + del_dirs.get(b, []):
-                        eras.setdefault(b, []).append({"dir": d, "covers": covers})
-                    touched.add(int(b))
-                if b in new_dirs:
-                    buckets[b] = buckets.get(b, []) + new_dirs[b]
-                    touched.add(int(b))
-            return Snapshot(
-                version=parent.version + 1,
-                parent=parent.version,
-                timestamp=_utcnow(),
-                operation=f"{operation}-mor",
-                schema_json=parent.schema_json,
-                key=parent.key,
-                n_buckets=parent.n_buckets,
-                buckets=buckets,
-                properties=parent.properties,
-                summary={"affected_buckets": sorted(touched), "mode": "merge-on-read"},
-                deletes=eras,
-                renames=parent.renames,
+            affected = set()
+            for b in set(new_data) | set(new_deletes):
+                cov = list(cover.get(b, []))
+                if cov:
+                    for d in new_data.get(b, []) + new_deletes.get(b, []):
+                        eras.setdefault(b, []).append({"dir": d, "covers": cov})
+                    affected.add(int(b))
+                if b in new_data:
+                    buckets[b] = buckets.get(b, []) + new_data[b]
+                    affected.add(int(b))
+            return _successor(
+                parent, operation, buckets=buckets, deletes=eras,
+                summary={**summary, "affected_buckets": sorted(affected)},
             )
 
-        return self._commit(build, f"{operation}-mor", txn_app=txn_app,
+        return self._commit(build, operation, txn_app=txn_app,
                             txn_version=txn_version)
 
     def delete_where(self, condition, mode: str = "copy-on-write") -> Snapshot:
-        """Predicate delete (the reference's retention purge shape,
-        ``src/utils/watermark.py:421-438``).
+        """Predicate DELETE (the reference's retention purge shape,
+        ``src/utils/watermark.py:421-438``): remove the rows where
+        ``condition`` IS TRUE. A row where it evaluates NULL survives.
 
-        ``condition`` forms (same contract as ``update_where``):
+        Predicate DML semantics (shared with ``update_where``):
 
-        - list of ``(col, op, value)`` tuples (the ``scan()`` filter
-          vocabulary, AND-ed) — or a list of such conjunctions, their
-          DISJUNCTION (OR of ANDs, ``_norm_dnf``): dir-level data
-          skipping — dirs whose footer stats cannot satisfy the
-          predicate are carried forward untouched and buckets with no
-          matching dir stay out of the commit, so a narrow DELETE
-          costs ∝ the dirs it can touch, not table size (at 100 TB a
-          retention purge on a time-clustered table rewrites only the
-          expiring dirs).
-        - SQL string or Column: arbitrary predicate; stats can't reason
-          about it, so every dir is touched (the pre-r12 behavior).
+        - ``condition`` is a list of ``(col, op, value)`` tuples (the
+          ``scan()`` filter vocabulary, AND-ed), a list of such
+          conjunctions (their DISJUNCTION, OR of ANDs, ``_norm_dnf``),
+          or an explicit ``{"or": [...]}`` / ``{"and": [...]}`` marker.
+          These forms get dir-level data skipping: dirs whose footer
+          stats cannot satisfy the predicate are carried forward
+          untouched, and buckets with no matching dir stay out of the
+          commit, so a narrow DML costs ∝ the dirs it can touch, not
+          table size (at 100 TB a retention purge on a time-clustered
+          table rewrites only the expiring dirs). A SQL string or a
+          Column is an arbitrary predicate that stats cannot reason
+          about, so every dir is touched.
+        - ``mode="copy-on-write"`` (default): the touched dirs are read
+          (live MoR masks applied) and rewritten. ``mode="merge-on-read"``
+          (keyed tables; Iceberg's ``write.delete.mode`` /
+          ``write.update.mode``): no rewrite — the matched rows' keys
+          commit as an equality-delete era whose ``covers`` is exactly
+          the touched dirs, so the cost is the pruned scan + O(matched
+          rows), and reads apply the era on covered dirs only until
+          ``rewrite_position_delete_files`` folds it.
+        - MoR concurrency is as-of-snapshot: a concurrent rewrite of a
+          touched dir, or a concurrent MoR delete era over one, raises
+          ``CommitConflict`` rather than masking rows that may no
+          longer match. Concurrent appends are NOT covered, unlike
+          ``delete_keys``'s newest-key-wins stance, because the
+          predicate was never evaluated on them.
+        - Every call commits one version, a no-op one when nothing
+          matches (unlike an empty ``merge``, which commits nothing).
+          The summary carries ``pruned_dirs``, ``touched_dirs``,
+          ``rewritten_dirs``, ``affected_buckets`` and ``mode``; the
+          operation is ``delete`` / ``update``, or ``delete-mor`` /
+          ``update-mor`` in merge-on-read mode."""
+        return self._predicate_rewrite(condition, mode, "delete")
 
-        ``mode="copy-on-write"`` (default): touched dirs are read
-        (existing MoR masks folded in) and rewritten without the
-        matching rows.  ``mode="merge-on-read"`` (keyed tables):
-        the matching rows' KEYS are written as an equality-delete era
-        whose ``covers`` is exactly the touched dirs — commit cost is
-        O(matching rows) + the pruned scan, never a rewrite; reads
-        apply the era anti-join on covered dirs only until
-        ``rewrite_position_delete_files`` folds it (Iceberg's
-        ``write.delete.mode`` choice, here with predicate semantics:
-        the predicate is evaluated AS OF this snapshot's touched dirs —
-        a concurrent rewrite of a touched dir raises
-        ``CommitConflict`` rather than masking rows that may no longer
-        match; concurrent appends are NOT covered, unlike
-        ``delete_keys``'s newest-key-wins stance, because a predicate
-        match on unseen rows was never evaluated)."""
+    def update_where(self, condition, assignments: dict[str, Any],
+                     mode: str = "copy-on-write") -> Snapshot:
+        """Bulk ``UPDATE ... SET`` (reference:
+        ``scripts/migrate_v2_naming.sql:43-49``) of the rows where
+        ``condition`` IS TRUE; a row where it evaluates NULL is left
+        as is. Condition forms, modes, concurrency and commit summary
+        are those of ``delete_where``.
+
+        ``assignments`` values follow SQL ``SET col = expr``: a string
+        is parsed as a SQL EXPRESSION (quote string literals:
+        ``{"v": "'fixed'"}``; reference columns directly: ``{"v":
+        "upper(v)"}``); any non-string becomes a literal. CHECK
+        constraints gate exactly the rows the update changes.
+
+        Copy-on-write may assign key columns: a row whose new key
+        hashes to another bucket lands there, and that bucket joins the
+        commit with all of its dirs kept. In merge-on-read mode only
+        the MATCHED rows are written, as new data dirs that double as
+        the era's key source (the ``_keyed_mor`` layout), so key
+        columns cannot be assigned — the mask is keyed on the NEW
+        row's key and would leave the old row unmasked."""
+        return self._predicate_rewrite(condition, mode, "update", assignments)
+
+    def _predicate_rewrite(
+        self, condition, mode: str, operation: str,
+        assignments: dict[str, Any] | None = None,
+    ) -> Snapshot:
+        """The one predicate-DML primitive behind ``delete_where``
+        (``assignments`` None) and ``update_where``: split the dirs by
+        the predicate, then the shared CoW tail (``_cow_rewrite``) or
+        the shared MoR era commit (``_era_commit``) over exactly the
+        touched dirs. See ``delete_where`` for semantics."""
         if mode not in ("copy-on-write", "merge-on-read"):
-            raise ValueError(f"unknown delete mode {mode!r}")
+            raise ValueError(f"unknown {operation} mode {mode!r}")
+        api = f"{operation}_where"
+        mor = mode == "merge-on-read"
         snap = self.snapshot()
+        if mor and not snap.key:
+            raise ValueError(f"merge-on-read {api} requires a keyed table")
+        bad = sorted(set(assignments or ()) & set(snap.key or ()))
+        if mor and bad:
+            raise ValueError(
+                f"merge-on-read {api} cannot assign key columns {bad}: "
+                "the mask is keyed on the new row's key, so a key change "
+                "would leave the old row unmasked — use copy-on-write"
+            )
         # dict = the explicit {"or"}/{"and"} markers — same tuple
         # vocabulary as the list forms, same dir pruning
-        filters = condition if isinstance(condition, (list, dict)) else None
-        if filters is not None:
-            dnf = _norm_dnf(filters)  # once, not per dir
+        if isinstance(condition, (list, dict)):
+            dnf = _norm_dnf(condition)  # once, not per dir
             cond = _dnf_expr(dnf)
-            touched: dict[str, list[str]] = {}
-            kept: dict[str, list[str]] = {}
-            for bs, dirs in snap.buckets.items():
-                t = [
-                    d
-                    for d in dirs
-                    if self._dir_may_match_dnf(
-                        snap.stats.get(d, {}), dnf, snap.renames.get(d)
-                    )
-                ]
-                if t:
-                    touched[bs] = t
-                    kept[bs] = [d for d in dirs if d not in set(t)]
         else:
+            dnf = None
             cond = F.expr(condition) if isinstance(condition, str) else condition
-            touched = {b: list(d) for b, d in snap.buckets.items() if d}
-            kept = {}
-        summary = {
-            "pruned_dirs": sum(len(v) for v in kept.values()),
-            "touched_dirs": sum(len(v) for v in touched.values()),
-            "mode": mode,
-        }
-        if mode == "merge-on-read":
-            return self._delete_where_mor(snap, touched, cond, summary)
-        affected = sorted(int(b) for b in touched)
-        if any(snap.deletes.get(b) for b in touched):
-            df = self._read_with_deletes(snap, touched)
-        elif touched:
-            df = self._read_dirs([d for ds in touched.values() for d in ds], snap)
-        else:
-            return self._replace_buckets(snap, {}, [], "delete", summary)
-        # SQL DELETE semantics: remove rows where cond IS TRUE — a row
-        # where the predicate evaluates NULL survives (~NULL is NULL and
-        # filter() would wrongly drop it)
-        remaining = df.filter(~cond | cond.isNull())
-        new_dirs = self._write_bucketed(remaining, snap.key, snap.n_buckets)
-        per_bucket = {
-            str(b): kept.get(str(b), []) + new_dirs.get(str(b), []) for b in affected
-        }
-        return self._replace_buckets(snap, per_bucket, affected, "delete", summary)
+        touched, kept = self._split_dirs(snap, dict.fromkeys(snap.buckets, dnf))
+        kept = {b: kept[b] for b, t in touched.items() if t}
+        touched = {b: touched[b] for b in kept}
+        summary = {"touched_dirs": sum(len(v) for v in touched.values()), "mode": mode}
+
+        def assign(df: DataFrame, where) -> DataFrame:
+            for col, val in assignments.items():
+                expr = F.expr(val) if isinstance(val, str) else F.lit(val)
+                df = df.withColumn(
+                    col, expr if where is None
+                    else F.when(where, expr).otherwise(F.col(col)),
+                )
+            return df
+
+        if not mor:
+            def rewrite(df: DataFrame) -> DataFrame:
+                if assignments is None:
+                    # SQL DELETE semantics: remove rows where cond IS
+                    # TRUE — a row where the predicate evaluates NULL
+                    # survives (~NULL is NULL, filter() would drop it)
+                    return df.filter(~cond | cond.isNull())
+                # per-call unique helper name — same collision-proofing
+                # as the partial-merge __matched/__t_* columns (a table
+                # may legitimately contain a column named "__upd")
+                upd_col = f"__upd_{uuid.uuid4().hex[:8]}"
+                df = assign(df.withColumn(upd_col, cond), F.col(upd_col))
+                # CHECK constraints gate the rows this UPDATE actually
+                # changed (untouched rows predate the constraint's
+                # validate decision)
+                self._enforce_constraints(df.where(F.col(upd_col)), api)
+                return self._align(df.drop(upd_col))
+
+            return self._cow_rewrite(snap, touched, kept, rewrite, operation, summary)
+
+        new_data: dict[str, list[str]] = {}
+        new_deletes: dict[str, list[str]] = {}
+        if touched:
+            matched = self._read_with_deletes(snap, touched).filter(cond)
+            if assignments is None:
+                # no distinct: the delete reader distincts the keys
+                new_deletes = self._write_bucketed(
+                    matched.select(*snap.key), snap.key, snap.n_buckets
+                )
+            else:
+                matched = assign(matched, None)
+                self._enforce_constraints(matched, api)
+                new_data = self._write_bucketed(
+                    self._align(matched), snap.key, snap.n_buckets
+                )
+
+        def covers(parent):
+            for b, t_dirs in touched.items():
+                if not set(t_dirs) <= set(parent.buckets.get(b, [])):
+                    # a touched dir was rewritten under us — its rows
+                    # may no longer match the predicate we evaluated
+                    raise CommitConflict(
+                        f"{api} on {self.location}: concurrent writer "
+                        f"rewrote a predicate-matched dir; re-run the {operation}"
+                    )
+            # a concurrent MoR delete era on a touched dir: an update
+            # would resurrect the keys it deleted with the new values
+            self._check_new_delete_eras(snap, parent, touched, api)
+            return touched
+
+        return self._era_commit(
+            new_data, new_deletes, covers, f"{operation}-mor",
+            {**summary, "pruned_dirs": sum(len(v) for v in kept.values()),
+             "rewritten_dirs": 0},
+        )
 
     def _check_new_delete_eras(
         self, snap: Snapshot, parent: Snapshot,
@@ -3798,270 +3860,6 @@ class LakeTable:
                         "predicate-matched dirs after the scan; re-run "
                         "against the current snapshot"
                     )
-
-    def _delete_where_mor(
-        self, snap: Snapshot, touched: dict[str, list[str]], cond, summary: dict
-    ) -> Snapshot:
-        """Merge-on-read predicate delete: one pruned scan projects the
-        matching rows' keys; they commit as an equality-delete era whose
-        ``covers`` is exactly the touched dirs (pruned dirs never pay
-        the read-side anti-join). See ``delete_where`` for semantics."""
-        if not snap.key:
-            raise ValueError("merge-on-read delete_where requires a keyed table")
-        if not touched:
-            def build_noop(parent):
-                return Snapshot(
-                    version=parent.version + 1,
-                    parent=parent.version,
-                    timestamp=_utcnow(),
-                    operation="delete-mor",
-                    schema_json=parent.schema_json,
-                    key=parent.key,
-                    n_buckets=parent.n_buckets,
-                    buckets={b: list(d) for b, d in parent.buckets.items()},
-                    properties=parent.properties,
-                    summary=summary,
-                    deletes=parent.deletes,
-                    renames=parent.renames,
-                )
-            return self._commit(build_noop, "delete-mor")
-        if any(snap.deletes.get(b) for b in touched):
-            df = self._read_with_deletes(snap, touched)
-        else:
-            df = self._read_dirs([d for ds in touched.values() for d in ds], snap)
-        keys_df = df.filter(cond).select(*snap.key).distinct()
-        new_dirs = self._write_bucketed(keys_df, snap.key, snap.n_buckets)
-
-        def build(parent):
-            deletes = {b: list(entries) for b, entries in parent.deletes.items()}
-            affected = []
-            for b, t_dirs in touched.items():
-                live = set(parent.buckets.get(b, []))
-                if not set(t_dirs) <= live:
-                    # a touched dir was rewritten under us — its rows may
-                    # no longer match the predicate we evaluated
-                    raise CommitConflict(
-                        f"delete_where on {self.location}: concurrent writer "
-                        f"rewrote a predicate-matched dir; re-run the delete"
-                    )
-            self._check_new_delete_eras(snap, parent, touched, "delete_where")
-            for b, t_dirs in touched.items():
-                for d in new_dirs.get(b, []):
-                    deletes.setdefault(b, []).append(
-                        {"dir": d, "covers": list(t_dirs)}
-                    )
-                if new_dirs.get(b):
-                    affected.append(int(b))
-            return Snapshot(
-                version=parent.version + 1,
-                parent=parent.version,
-                timestamp=_utcnow(),
-                operation="delete-mor",
-                schema_json=parent.schema_json,
-                key=parent.key,
-                n_buckets=parent.n_buckets,
-                buckets={b: list(d) for b, d in parent.buckets.items()},
-                properties=parent.properties,
-                summary={**summary, "affected_buckets": sorted(affected)},
-                deletes=deletes,
-                renames=parent.renames,
-            )
-
-        return self._commit(build, "delete-mor")
-
-    def update_where(self, condition, assignments: dict[str, Any],
-                     mode: str = "copy-on-write") -> Snapshot:
-        """Bulk UPDATE ... SET (reference: ``scripts/migrate_v2_naming.sql:43-49``).
-
-        ``condition`` forms:
-        - SQL string or Column: arbitrary predicate, full-table rewrite
-          (every bucket's dirs are read and rewritten).
-        - list of ``(col, op, value)`` tuples (the ``scan()`` filter
-          vocabulary, AND-ed) — or a list of such conjunctions, their
-          DISJUNCTION (OR of ANDs, ``_norm_dnf``): same semantics, plus
-          dir-level data skipping — dirs whose footer stats cannot
-          satisfy the predicate (no branch can match, for OR) are
-          carried forward untouched, and buckets with no matching dir
-          are left out of the commit entirely, so a narrow UPDATE
-          costs ∝ the dirs it can touch, not table size.
-
-        ``assignments`` values follow SQL ``SET col = expr``: a string
-        is parsed as a SQL EXPRESSION (quote string literals:
-        ``{"v": "'fixed'"}``; reference columns directly: ``{"v":
-        "upper(v)"}``); any non-string becomes a literal.
-
-        ``mode="merge-on-read"`` (keyed tables; Iceberg's
-        ``write.update.mode`` choice): only the MATCHED rows are
-        written, as new data dirs that double as the equality-delete
-        key source masking their old versions (the ``_keyed_mor``
-        layout) with ``covers`` = exactly the touched dirs — commit
-        cost is the pruned scan + O(matched rows), never a rewrite; a
-        backfill touching 0.1% of a 100 TB table moves 0.1% of the
-        bytes. Key columns cannot be assigned in this mode (the mask is
-        keyed on the NEW row's key, so a key change would leave the old
-        row unmasked — CoW handles key rewrites). Same as-of-snapshot
-        concurrency stance as ``delete_where``'s MoR mode: a concurrent
-        rewrite of a touched dir raises ``CommitConflict``; concurrent
-        appends are not covered.
-        """
-        if mode not in ("copy-on-write", "merge-on-read"):
-            raise ValueError(f"unknown update mode {mode!r}")
-        snap = self.snapshot()
-        # dict = the explicit {"or"}/{"and"} markers — same tuple
-        # vocabulary as the list forms, same dir pruning
-        filters = condition if isinstance(condition, (list, dict)) else None
-        if filters is not None:
-            dnf = _norm_dnf(filters)  # once, not per dir
-            cond = _dnf_expr(dnf)
-            touched: dict[str, list[str]] = {}
-            kept: dict[str, list[str]] = {}
-            for bs, dirs in snap.buckets.items():
-                t = [
-                    d
-                    for d in dirs
-                    if self._dir_may_match_dnf(
-                        snap.stats.get(d, {}), dnf, snap.renames.get(d)
-                    )
-                ]
-                if t:
-                    touched[bs] = t
-                    kept[bs] = [d for d in dirs if d not in set(t)]
-            affected = sorted(int(b) for b in touched)
-        else:
-            cond = F.expr(condition) if isinstance(condition, str) else condition
-            touched = {b: list(d) for b, d in snap.buckets.items() if d}
-            kept = {}
-            affected = list(range(snap.n_buckets))
-        if mode == "merge-on-read":
-            summary = {
-                "pruned_dirs": sum(len(v) for v in kept.values()),
-                "touched_dirs": sum(len(v) for v in touched.values()),
-                "mode": mode,
-            }
-            return self._update_where_mor(snap, touched, cond, assignments, summary)
-        if filters is not None:
-            if any(snap.deletes.get(b) for b in touched):
-                df = self._read_with_deletes(snap, touched)
-            else:
-                df = self._read_dirs(
-                    [d for ds in touched.values() for d in ds], snap
-                )
-        else:
-            df = self.read()
-        # per-call unique helper name — same collision-proofing as the
-        # partial-merge __matched/__t_* columns (a table may legitimately
-        # contain a column named "__upd")
-        upd_col = f"__upd_{uuid.uuid4().hex[:8]}"
-        df = df.withColumn(upd_col, cond)
-        for col, val in assignments.items():
-            expr = F.expr(val) if isinstance(val, str) else F.lit(val)
-            df = df.withColumn(col, F.when(F.col(upd_col), expr).otherwise(F.col(col)))
-        # CHECK constraints gate the rows this UPDATE actually changed
-        # (untouched rows predate the constraint's validate decision)
-        self._enforce_constraints(df.where(F.col(upd_col)), "update_where")
-        updated = self._align(df.drop(upd_col))
-        new_dirs = self._write_bucketed(updated, snap.key, snap.n_buckets)
-        per_bucket = {
-            str(b): kept.get(str(b), []) + new_dirs.get(str(b), []) for b in affected
-        }
-        summary = (
-            {
-                "pruned_dirs": sum(len(v) for v in kept.values()),
-                "rewritten_dirs": sum(len(v) for v in touched.values()),
-            }
-            if filters is not None
-            else {}
-        )
-        return self._replace_buckets(snap, per_bucket, affected, "update", summary)
-
-    def _update_where_mor(
-        self, snap: Snapshot, touched: dict[str, list[str]], cond,
-        assignments: dict[str, Any], summary: dict,
-    ) -> Snapshot:
-        """Merge-on-read predicate UPDATE: one pruned scan selects the
-        matched rows, the assignments apply to THOSE rows only, and
-        they commit as new data dirs that double as the equality-delete
-        key source (the ``_keyed_mor`` layout) with ``covers`` =
-        exactly the touched dirs. See ``update_where`` for semantics."""
-        if not snap.key:
-            raise ValueError("merge-on-read update_where requires a keyed table")
-        bad = sorted(set(assignments) & set(snap.key))
-        if bad:
-            raise ValueError(
-                f"merge-on-read update_where cannot assign key columns {bad}: "
-                "the mask is keyed on the new row's key, so a key change "
-                "would leave the old row unmasked — use copy-on-write"
-            )
-        if not touched:
-            def build_noop(parent):
-                return Snapshot(
-                    version=parent.version + 1,
-                    parent=parent.version,
-                    timestamp=_utcnow(),
-                    operation="update-mor",
-                    schema_json=parent.schema_json,
-                    key=parent.key,
-                    n_buckets=parent.n_buckets,
-                    buckets={b: list(d) for b, d in parent.buckets.items()},
-                    properties=parent.properties,
-                    summary=summary,
-                    deletes=parent.deletes,
-                    renames=parent.renames,
-                )
-            return self._commit(build_noop, "update-mor")
-        if any(snap.deletes.get(b) for b in touched):
-            df = self._read_with_deletes(snap, touched)
-        else:
-            df = self._read_dirs([d for ds in touched.values() for d in ds], snap)
-        matched = df.filter(cond)
-        for col, val in assignments.items():
-            expr = F.expr(val) if isinstance(val, str) else F.lit(val)
-            matched = matched.withColumn(col, expr)
-        # CHECK constraints gate exactly the rows this UPDATE changes
-        self._enforce_constraints(matched, "update_where")
-        updated = self._align(matched)
-        new_dirs = self._write_bucketed(updated, snap.key, snap.n_buckets)
-
-        def build(parent):
-            deletes = {b: list(entries) for b, entries in parent.deletes.items()}
-            buckets = {b: list(d) for b, d in parent.buckets.items()}
-            affected = []
-            for b, t_dirs in touched.items():
-                live = set(parent.buckets.get(b, []))
-                if not set(t_dirs) <= live:
-                    raise CommitConflict(
-                        f"update_where on {self.location}: concurrent writer "
-                        f"rewrote a predicate-matched dir; re-run the update"
-                    )
-            # concurrent MoR delete era on a touched dir would resurrect
-            # the keys it deleted with this update's new values
-            self._check_new_delete_eras(snap, parent, touched, "update_where")
-            for b, dirs in new_dirs.items():
-                covers = list(touched.get(b, []))
-                for d in dirs:
-                    if covers:
-                        deletes.setdefault(b, []).append(
-                            {"dir": d, "covers": covers}
-                        )
-                buckets.setdefault(b, [])
-                buckets[b] = buckets[b] + dirs
-                affected.append(int(b))
-            return Snapshot(
-                version=parent.version + 1,
-                parent=parent.version,
-                timestamp=_utcnow(),
-                operation="update-mor",
-                schema_json=parent.schema_json,
-                key=parent.key,
-                n_buckets=parent.n_buckets,
-                buckets=buckets,
-                properties=parent.properties,
-                summary={**summary, "affected_buckets": sorted(affected)},
-                deletes=deletes,
-                renames=parent.renames,
-            )
-
-        return self._commit(build, "update-mor")
 
     # ------------------------------------------------------------------ maintenance
     def rebucket(self, new_n_buckets: int) -> Snapshot:
@@ -4141,22 +3939,10 @@ class LakeTable:
                     f"v{snap.version} to v{parent.version if parent else None} "
                     "during the rewrite; re-run rebucket"
                 )
-            return Snapshot(
-                version=parent.version + 1,
-                parent=parent.version,
-                timestamp=_utcnow(),
-                operation="rebucket",
-                schema_json=parent.schema_json,
-                key=parent.key,
-                n_buckets=new_n_buckets,
-                buckets=buckets,
-                properties=parent.properties,
-                summary={
-                    "from_buckets": snap.n_buckets,
-                    "to_buckets": new_n_buckets,
-                },
-                deletes=deletes,
-                renames=renames,
+            return _successor(
+                parent, "rebucket", n_buckets=new_n_buckets, buckets=buckets,
+                summary={"from_buckets": snap.n_buckets, "to_buckets": new_n_buckets},
+                deletes=deletes, renames=renames,
             )
 
         return self._commit(build, "rebucket")
@@ -4278,20 +4064,7 @@ class LakeTable:
         def build(parent):
             if parent is None:
                 raise ValueError(f"table {self.location} does not exist")
-            snap = Snapshot(
-                version=parent.version + 1,
-                parent=parent.version,
-                timestamp=_utcnow(),
-                operation=operation,
-                schema_json=parent.schema_json,
-                key=parent.key,
-                n_buckets=parent.n_buckets,
-                buckets={b: list(d) for b, d in parent.buckets.items()},
-                properties=dict(parent.properties),
-                summary={},
-                deletes=parent.deletes,
-                renames={d: dict(m) for d, m in parent.renames.items()},
-            )
+            snap = _successor(parent, operation, **_content_of(parent))
             mutate(snap)
             return snap
 

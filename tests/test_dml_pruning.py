@@ -2,7 +2,7 @@
 
 Within an affected bucket, a data dir whose harvested key min/max range
 cannot intersect the source batch's key bounds is carried forward
-untouched instead of being rewritten (``_split_dirs_by_key_bounds``).
+untouched instead of being rewritten (``LakeTable._split_dirs``).
 These tests build a bucket with several disjoint key-range dirs (one
 per append) and assert both the pruning metric and, always, the exact
 post-DML table state.
@@ -363,31 +363,37 @@ def test_delete_where_time_travel_keeps_prior_version(catalog, spark):
     assert _rows(t.read(version=v)) == {(i, f"v{i}") for i in range(300)}
 
 
+def _race_in_commit(t, operation, concurrent):
+    """Run ``concurrent()`` once inside ``t``'s first ``operation``
+    commit — after the DML's scan and data write, before its builder
+    runs against the fresh parent."""
+    real_commit = type(t)._commit
+    fired = {"n": 0}
+
+    def racing_commit(self, build, op, **kw):
+        if op == operation and not fired["n"]:
+            fired["n"] = 1
+            concurrent()
+        return real_commit(self, build, op, **kw)
+
+    t._commit = racing_commit.__get__(t)
+
+
 def test_delete_where_mor_conflicts_with_concurrent_rewrite(catalog, spark):
     """Predicate semantics are as-of-snapshot: if a touched dir is
     rewritten between the predicate scan and the commit, the era must
     NOT publish (the rewritten rows may no longer match). Simulated by
-    driving _delete_where_mor with a stale touched-set after an
-    update_where replaced those dirs."""
+    a second handle's update_where replacing those dirs inside the
+    delete's commit."""
     from datalake_iceberg_spark import tables as tb
 
     t = _mk_range_table(catalog, spark)
-    snap = t.snapshot()
-    filters = tb._norm_filters([("id", ">=", 250)])
-    cond = tb._filter_expr(filters)
-    touched = {
-        bs: [
-            d for d in dirs
-            if t._dir_may_match(snap.stats.get(d, {}), filters, snap.renames.get(d))
-        ]
-        for bs, dirs in snap.buckets.items()
-    }
-    touched = {b: ds for b, ds in touched.items() if ds}
-    assert touched
+    other = catalog.table("db.pruned")
     # concurrent writer rewrites (part of) the touched range
-    t.update_where([("id", ">=", 290)], {"v": "'raced'"})
+    _race_in_commit(t, "delete-mor", lambda: other.update_where(
+        [("id", ">=", 290)], {"v": "'raced'"}))
     with pytest.raises(tb.CommitConflict, match="rewrote a predicate-matched dir"):
-        t._delete_where_mor(snap, touched, cond, {"mode": "merge-on-read"})
+        t.delete_where([("id", ">=", 250)], mode="merge-on-read")
     # nothing published: the race left the table exactly post-update
     got = _rows(t.read())
     assert got == {(i, "raced" if i >= 290 else f"v{i}") for i in range(300)}
@@ -398,22 +404,11 @@ def test_delete_where_mor_concurrent_append_not_covered(catalog, spark):
     not covered by the era even when they match the predicate — the
     match was never evaluated on them (contrast delete_keys'
     newest-key-wins)."""
-    from datalake_iceberg_spark import tables as tb
-
     t = _mk_range_table(catalog, spark)
-    snap = t.snapshot()
-    filters = tb._norm_filters([("id", ">=", 250)])
-    cond = tb._filter_expr(filters)
-    touched = {
-        bs: [
-            d for d in dirs
-            if t._dir_may_match(snap.stats.get(d, {}), filters, snap.renames.get(d))
-        ]
-        for bs, dirs in snap.buckets.items()
-    }
-    touched = {b: ds for b, ds in touched.items() if ds}
-    t.append(spark.createDataFrame([Row(id=500, v="late")]))  # matches id>=250
-    t._delete_where_mor(snap, touched, cond, {"mode": "merge-on-read"})
+    other = catalog.table("db.pruned")
+    _race_in_commit(t, "delete-mor", lambda: other.append(
+        spark.createDataFrame([Row(id=500, v="late")])))  # matches id>=250
+    t.delete_where([("id", ">=", 250)], mode="merge-on-read")
     got = _rows(t.read())
     want = {(i, f"v{i}") for i in range(250)} | {(500, "late")}
     assert got == want
