@@ -15,8 +15,11 @@ snapshot/manifest protocol needs:
   (S3: plain PUT — single-key PUTs are atomic).
 - listings and recursive deletes for data-dir bookkeeping.
 
-Data-file bytes never flow through here — Spark reads/writes parquet
-through its own Hadoop FileSystem; this seam carries only metadata
+Data-file bytes flow through here in one case only: ``open_output``
+carries the small parquet file ``LakeTable.append_rows`` writes from the
+driver (a few ops-ledger rows, where a Spark job would cost more than
+the bytes). Every other data file is read and written by Spark through
+its own Hadoop FileSystem; otherwise this seam carries only metadata
 (manifests, version pointers, directory names).
 """
 
@@ -65,6 +68,15 @@ class LocalFilesystem:
         manifests) — callers must close it. Object-store adapters return
         their native seekable stream."""
         return open(path, "rb")
+
+    def open_output(self, path: str):
+        """Binary writer for a driver-written data file (the few rows
+        of ``LakeTable.append_rows``) — callers must close it. The path
+        is a fresh name in a fresh commit dir, so no reader sees the
+        file before the manifest that lists its dir publishes.
+        Object-store adapters return an upload stream that creates the
+        object on close."""
+        return open(path, "wb")
 
     def read_text(self, path: str) -> str:
         with open(path) as f:

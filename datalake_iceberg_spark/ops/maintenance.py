@@ -18,6 +18,7 @@ The Iceberg procedures map onto LakeTable maintenance:
 
 from __future__ import annotations
 
+import logging
 import re
 from datetime import datetime, timezone
 
@@ -30,6 +31,8 @@ ORPHANS = "remove_orphan_files"
 POSITION_DELETES = "rewrite_position_delete_files"
 ROLLUP_REFRESH = "rollup_refresh"
 ANALYZE = "analyze_ndv"
+
+logger = logging.getLogger(__name__)
 
 
 class ProcessedTableTracker:
@@ -54,33 +57,46 @@ class MaintenanceService:
 
     def _run_recorded(self, table_name: str, procedure: str, fn) -> dict:
         """Run one procedure; record success/failed; never raise
-        (reference policy at ``maintenance.py:66-304``)."""
-        schema, _, tbl = table_name.rpartition(".")
+        (reference policy at ``maintenance.py:66-304``). The status is
+        the procedure's alone: a ledger append that fails afterwards is
+        logged, and does not turn a success into a failure."""
         started = datetime.now(timezone.utc).replace(tzinfo=None)
         try:
             result = fn() or {}
-            self.store.append_maintenance(
-                self.dag_id, schema or "default", tbl, procedure,
-                started_at=started, status="success",
-                rewritten_files_count=result.get("rewritten_dirs", 0),
-                added_files_count=result.get("rewritten_buckets", 0),
-            )
-            return {"status": "success", **result}
         except Exception as e:  # noqa: BLE001 — record, don't propagate
-            self.store.append_maintenance(
-                self.dag_id, schema or "default", tbl, procedure,
-                started_at=started, status="failed", error_message=str(e)[:500],
-            )
+            logger.warning("maintenance %s on %s failed: %s", procedure, table_name, e,
+                           exc_info=True)
+            self._record(table_name, procedure, started, "failed",
+                         error_message=str(e)[:500])
             return {"status": "failed", "error": str(e)}
+        self._record(
+            table_name, procedure, started, "success",
+            rewritten_files_count=result.get("rewritten_dirs", 0),
+            added_files_count=result.get("rewritten_buckets", 0),
+        )
+        return {"status": "success", **result}
 
     def _record_skipped(self, table_name: str, procedure: str) -> dict:
-        schema, _, tbl = table_name.rpartition(".")
         started = datetime.now(timezone.utc).replace(tzinfo=None)
-        self.store.append_maintenance(
-            self.dag_id, schema or "default", tbl, procedure,
-            started_at=started, status="skipped",
-        )
+        self._record(table_name, procedure, started, "skipped")
         return {"status": "skipped"}
+
+    def _record(
+        self, table_name: str, procedure: str, started: datetime, status: str, **fields
+    ) -> None:
+        """Append one procedure-history row; a failed append is logged,
+        never raised."""
+        schema, _, tbl = table_name.rpartition(".")
+        try:
+            self.store.append_maintenance(
+                self.dag_id, schema or "default", tbl, procedure,
+                started_at=started, status=status, **fields,
+            )
+        except Exception as e:  # noqa: BLE001 — the ledger must not break the run
+            logger.warning(
+                "maintenance ledger append (%s %s) on %s failed: %s",
+                procedure, status, table_name, e, exc_info=True,
+            )
 
     def run_compaction(
         self, table_name: str, interval_sec: int = 14_400,

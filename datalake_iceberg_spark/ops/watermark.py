@@ -5,10 +5,19 @@ Rebuilds the reference's two progress-ledger tables
 metrics, F3) and ``maintenance_watermark`` (procedure history, F4).
 NOT Spark's event-time watermark — this is an append-only ops log.
 
+How rows are written: each append is one row through
+``LakeTable.append_rows`` — the driver writes one small parquet file
+into a fresh commit dir and commits it, with no Spark job (the runner
+and the maintenance service append several rows per micro-batch, and a
+Spark write job per row was a large share of the batch's fixed cost).
+The ledgers are unkeyed and declare no constraints or writer
+properties, so they always take that driver path.
+
 Design decisions carried over from the reference:
 - **append-only under concurrency** (``watermark.py:175-180``): every
-  topic/thread appends its own rows; conflict-free because LakeTable
-  append commits rebase by unioning directory lists (the moral
+  topic/thread appends its own rows; conflict-free because each append
+  writes only its own new dir, and a commit that loses a race rebases
+  by re-unioning the directory lists onto the new parent (the moral
   equivalent of Iceberg's ``commit.retry`` on AppendFiles).
 - **merge variant reserved for single-writer** (``watermark.py:212-216``).
 - **purge with keep-latest** (``watermark.py:408-458``): delete rows
@@ -22,7 +31,7 @@ from __future__ import annotations
 
 from datetime import datetime, timedelta, timezone
 
-from pyspark.sql import DataFrame, Row, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -95,7 +104,7 @@ class WatermarkStore:
     ) -> None:
         """Append one ingest-progress row (reference ``watermark.py:161-195``);
         safe under concurrent writers."""
-        row = Row(
+        row = dict(
             dag_id=dag_id, schema_name=schema_name, table_name=table_name,
             scheduled_at=scheduled_at, max_event_ts=max_event_ts,
             processed_at=_utcnow(),
@@ -103,7 +112,7 @@ class WatermarkStore:
             event_count=event_count,
             processing_duration_sec=processing_duration_sec, batch_id=batch_id,
         )
-        self.cdc().append(self.spark.createDataFrame([row], CDC_WATERMARK_SCHEMA))
+        self.cdc().append_rows([row])
 
     def append_maintenance(
         self, dag_id: str, schema_name: str, table_name: str, procedure_type: str, *,
@@ -113,7 +122,7 @@ class WatermarkStore:
     ) -> None:
         """Append one procedure-history row (reference ``watermark.py:317-356``)."""
         completed = _utcnow()
-        row = Row(
+        row = dict(
             dag_id=dag_id, schema_name=schema_name, table_name=table_name,
             procedure_type=procedure_type, started_at=started_at,
             completed_at=completed,
@@ -122,9 +131,7 @@ class WatermarkStore:
             rewritten_files_count=rewritten_files_count,
             added_files_count=added_files_count, batch_id=batch_id,
         )
-        self.maintenance().append(
-            self.spark.createDataFrame([row], MAINT_WATERMARK_SCHEMA)
-        )
+        self.maintenance().append_rows([row])
 
     # ------------------------------------------------------------- reads
     def last_completed_map(

@@ -29,6 +29,8 @@ import os
 import threading
 import time
 from dataclasses import dataclass, field
+from datetime import datetime
+from zoneinfo import ZoneInfo, ZoneInfoNotFoundError
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -128,6 +130,19 @@ class BatchProgressListener:
             self._thread.join(timeout=5)
 
 
+def _parse_event_ts(text: str | None, session_tz: str) -> datetime | None:
+    """``batch_stats`` formats the batch's newest event time as text in
+    the session timezone; parse it back to an aware datetime, so the
+    ledger stores the same instant under any process timezone."""
+    if text is None:
+        return None
+    fmt = "%Y-%m-%d %H:%M:%S.%f"
+    try:
+        return datetime.strptime(text, fmt).replace(tzinfo=ZoneInfo(session_tz))
+    except (ValueError, ZoneInfoNotFoundError):  # an offset id, e.g. "+01:00"
+        return datetime.strptime(f"{text} {session_tz}", f"{fmt} %z")
+
+
 class CdcStreamRunner:
     def __init__(
         self,
@@ -219,6 +234,10 @@ class CdcStreamRunner:
                 schema_name, _, table_name = source.name.rpartition(".")
                 self.store.append_cdc(
                     self.dag_id, schema_name or "default", table_name,
+                    max_event_ts=_parse_event_ts(
+                        stats.max_event_ts,
+                        self.spark.conf.get("spark.sql.session.timeZone"),
+                    ),
                     event_count=stats.event_count,
                     min_offset=stats.min_offset, max_offset=stats.max_offset,
                     processing_duration_sec=time.time() - t0, batch_id=batch_id,

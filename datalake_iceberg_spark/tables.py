@@ -3084,6 +3084,71 @@ class LakeTable:
         self._enforce_constraints(df, "append")
         cur = self.snapshot()
         new = self._write_bucketed(df, cur.key, cur.n_buckets)
+        return self._commit_appended(new, txn_app, txn_version)
+
+    def append_rows(self, rows: list[dict]) -> Snapshot:
+        """Append a few Python rows (dicts keyed by column name; a
+        missing column is NULL) without a Spark job: the driver writes
+        one snappy parquet file into a fresh commit dir and commits it
+        exactly as :meth:`append` does. This is the ops ledger's write
+        path, where a one-row Spark write would cost a job, a task and
+        an empty second file for a few hundred bytes.
+
+        Values pass the same type verification and ``toInternal``
+        conversion ``createDataFrame`` applies, so a naive datetime is
+        read in the process timezone and an aware one keeps its
+        instant, as on the Spark path. Columns are written as the
+        session writes them: string, int64, float64 and
+        ``TIMESTAMP_MICROS`` adjusted to UTC.
+
+        A table this path cannot write exactly as Spark would takes
+        ``append(createDataFrame(rows, schema))`` instead: a keyed table
+        (rows need the bucket hash), one with CHECK constraints or
+        parquet writer properties, or a schema with a column type
+        outside string/long/double/timestamp."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        schema = self.schema()
+        arrow_of = {
+            T.StringType: pa.string(),
+            T.LongType: pa.int64(),
+            T.DoubleType: pa.float64(),
+            T.TimestampType: pa.timestamp("us", tz="UTC"),
+        }
+        if (
+            self.snapshot().key
+            or self.constraints()
+            or self._writer_options()
+            or any(type(f.dataType) not in arrow_of for f in schema.fields)
+        ):
+            return self.append(self.spark.createDataFrame(rows, schema))
+        verify = T._make_type_verifier(schema)
+        for row in rows:
+            verify(row)
+        fields = [
+            pa.field(f.name, arrow_of[type(f.dataType)], f.nullable)
+            for f in schema.fields
+        ]
+        columns = list(zip(*(schema.toInternal(r) for r in rows))) or [()] * len(fields)
+        table = pa.Table.from_arrays(
+            [pa.array(c, fld.type) for c, fld in zip(columns, fields)],
+            schema=pa.schema(fields),
+        )
+        rel = self._new_commit_dir()
+        path = self.fs.join(self.location, rel, f"part-00000-{uuid.uuid4()}.parquet")
+        with self.fs.open_output(path) as out:
+            pq.write_table(table, out, compression="snappy", store_schema=False)
+        self._harvest_stats([rel])
+        return self._commit_appended({"0": [rel]})
+
+    def _commit_appended(
+        self, new: dict[str, list[str]], txn_app: str | None = None,
+        txn_version: int | None = None,
+    ) -> Snapshot:
+        """Commit freshly written dirs (bucket -> dirs) as an append:
+        conflict-free under concurrency, because a rebase just re-unions
+        the dir lists."""
 
         def build(parent):
             merged = {b: list(dirs) for b, dirs in parent.buckets.items()}

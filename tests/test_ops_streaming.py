@@ -173,3 +173,70 @@ def test_failure_domain_isolation(spark, catalog, store, tmp_path):
     assert errors["db.ok"] is None
     assert errors["db.bad"] is not None
     assert ok_t.read().count() == 2
+
+
+def test_runner_records_max_event_ts(spark, catalog, store, tmp_path):
+    """The CDC ledger row carries the batch's newest event time."""
+    base = surrogate_key(spark.createDataFrame([Row(id=1, v="a")]), ["id"])
+    target = catalog.create_or_replace("db.evts", base, key=[SURROGATE_KEY_COL], n_buckets=2)
+    src_dir = str(tmp_path / "evts_in")
+    newest_ms = 1_700_000_123_456
+    _write_envelopes(src_dir, [
+        ("u", 1, "x", 1, newest_ms - 60_000), ("c", 2, "y", 2, newest_ms),
+        ("u", 1, "z", 3, newest_ms - 1),
+    ], part=0)
+    runner = CdcStreamRunner(spark, store, checkpoint_root=str(tmp_path / "ckpt"))
+    runner.run_source(SourceConfig(name="db.evts", path=src_dir, schema=ENVELOPE_DDL,
+                                   key_cols=["id"]), target)
+    (row,) = (store.cdc().read().filter(F.col("event_count") > 0)
+              .select(F.unix_micros("max_event_ts").alias("us")).collect())
+    assert row.us == newest_ms * 1000
+
+
+class _FlakyLedgerStore(WatermarkStore):
+    """A store whose maintenance-ledger append raises ``failures`` times."""
+
+    def __init__(self, catalog, failures):
+        super().__init__(catalog)
+        self.failures = failures
+
+    def append_maintenance(self, *args, **kwargs):
+        if self.failures:
+            self.failures -= 1
+            raise OSError("ledger unavailable")
+        return super().append_maintenance(*args, **kwargs)
+
+
+def test_ledger_failure_does_not_fail_the_procedure(catalog, spark, caplog):
+    t = catalog.create_or_replace(
+        "default.lf", spark.createDataFrame([Row(id=1, v="a")]), key=["id"], n_buckets=2
+    )
+    t.append(spark.createDataFrame([Row(id=2, v="b")]))
+    store = _FlakyLedgerStore(catalog, failures=1)
+    store.ensure_tables()
+    svc = MaintenanceService(catalog, store)
+    with caplog.at_level("WARNING", logger="datalake_iceberg_spark.ops.maintenance"):
+        res = svc.run_compaction("default.lf", interval_sec=60, min_input_dirs=1)
+    # compaction succeeded; its lost ledger row must not skip expiry
+    assert res["status"] == "success"
+    rows = {(r.procedure_type, r.status) for r in store.maintenance().read().collect()}
+    assert rows == {("expire_snapshots", "success")}
+    (rec,) = caplog.records
+    assert rec.levelname == "WARNING"
+    assert "rewrite_data_files" in rec.getMessage() and "default.lf" in rec.getMessage()
+    assert "ledger unavailable" in rec.getMessage()
+
+
+def test_failed_procedure_with_failing_ledger_never_raises(catalog, caplog):
+    svc = MaintenanceService(catalog, _FlakyLedgerStore(catalog, failures=2))
+
+    def boom():
+        raise RuntimeError("compaction exploded")
+
+    with caplog.at_level("WARNING", logger="datalake_iceberg_spark.ops.maintenance"):
+        res = svc._run_recorded("default.gone", "rewrite_data_files", boom)
+    assert res == {"status": "failed", "error": "compaction exploded"}
+    messages = [r.getMessage() for r in caplog.records]
+    assert len(messages) == 2
+    assert all("rewrite_data_files" in m and "default.gone" in m for m in messages)
+    assert "compaction exploded" in messages[0] and "ledger unavailable" in messages[1]

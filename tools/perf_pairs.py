@@ -19,7 +19,10 @@ interquartile range exceeds the bound and the change's runs do not all
 beat the parent's. A metric the change improved in at least nine of
 ten pairs, by more than the parent's interquartile range, is marked
 ``gain``. Runs that report ``correct: false`` or a failed
-operation are listed.
+operation are listed. Traced runs (``--trace 1``) report the
+``per_layer`` metrics instead; those get a second table with each
+side's median and quartiles and the change in the median, without a
+verdict, since per-layer figures are not gated.
 
 Each run's JSON line is appended to ``--out`` as it finishes;
 ``--report`` prints the tables from such a file without running
@@ -65,6 +68,17 @@ def quartiles(v: list[float]) -> tuple[float, float, float]:
     return q1, q2, q3
 
 
+def summarize(pairs: list[tuple[float, float]]) -> tuple[tuple, tuple, float, str]:
+    """Each side's quartiles over (parent, change) pairs, the relative
+    change in the median, and the three table cells showing them."""
+    par = quartiles([p for p, _ in pairs])
+    chg = quartiles([c for _, c in pairs])
+    rel = (chg[1] - par[1]) / par[1] if par[1] else 0.0
+    cells = (f"{par[1]:.4g} [{par[0]:.4g}, {par[2]:.4g}] | "
+             f"{chg[1]:.4g} [{chg[0]:.4g}, {chg[2]:.4g}] | {rel:+.1%}")
+    return par, chg, rel, cells
+
+
 def report(records: list[dict], spec: dict) -> None:
     """Print the per-workload tables for paired run records."""
     for wl in sorted({r["workload"] for r in records}):
@@ -80,21 +94,21 @@ def report(records: list[dict], spec: dict) -> None:
             print("runs not correct or with failed operations: " + ", ".join(bad))
         if not seeds:
             continue
-        print("| metric | parent median [q1, q3] | change median [q1, q3] | "
-              "change | wins | bound | verdict |")
-        print("|---|---|---|---|---|---|---|")
-        for m in spec["end_to_end"]:
-            name, lower = m["name"], m["better"] == "lower"
+
+        def pairs_of(name: str) -> list[tuple[float, float]]:
             pairs = [(runs[(s, "parent")]["metrics"].get(name, {}).get("value"),
                       runs[(s, "change")]["metrics"].get(name, {}).get("value"))
                      for s in seeds]
-            pairs = [(p, c) for p, c in pairs if p is not None and c is not None]
+            return [(p, c) for p, c in pairs if p is not None and c is not None]
+
+        gated = []
+        for m in spec["end_to_end"]:
+            name, lower = m["name"], m["better"] == "lower"
+            pairs = pairs_of(name)
             if not pairs:
                 continue
-            par = quartiles([p for p, _ in pairs])
-            chg = quartiles([c for _, c in pairs])
+            par, chg, rel, cells = summarize(pairs)
             wins = sum((c < p) if lower else (c > p) for p, c in pairs)
-            rel = (chg[1] - par[1]) / par[1] if par[1] else 0.0
             worse = rel > m["bound"] if lower else -rel > m["bound"]
             gained = (wins * 10 >= 9 * len(pairs)
                       and abs(chg[1] - par[1]) > par[2] - par[0])
@@ -109,9 +123,26 @@ def report(records: list[dict], spec: dict) -> None:
                 verdict = "unresolved (spread > bound)"
             else:
                 verdict = "ok, gain" if gained else "ok"
-            print(f"| {name} | {par[1]:.4g} [{par[0]:.4g}, {par[2]:.4g}] | "
-                  f"{chg[1]:.4g} [{chg[0]:.4g}, {chg[2]:.4g}] | {rel:+.1%} | "
-                  f"{wins}/{len(pairs)} | {m['bound']} | {verdict} |")
+            gated.append(f"| {name} | {cells} | {wins}/{len(pairs)} | {m['bound']} | "
+                         f"{verdict} |")
+        if gated:
+            print("| metric | parent median [q1, q3] | change median [q1, q3] | "
+                  "change | wins | bound | verdict |")
+            print("|---|---|---|---|---|---|---|")
+            print("\n".join(gated))
+        # traced runs (--trace 1) report per-layer figures; these are
+        # not gated, so they get no wins count and no verdict
+        layers = []
+        for m in spec.get("per_layer", []):
+            pairs = pairs_of(m["name"])
+            if not pairs:
+                continue
+            layers.append(f"| {m['name']} | {summarize(pairs)[3]} |")
+        if layers:
+            print("\nper-layer (traced runs, not gated)\n")
+            print("| metric | parent median [q1, q3] | change median [q1, q3] | change |")
+            print("|---|---|---|---|")
+            print("\n".join(layers))
 
 
 def main(argv=None) -> int:
