@@ -342,6 +342,20 @@ def plan_size_bytes(df: DataFrame) -> int | None:
     return size if 0 < size < (1 << 60) else None
 
 
+def target_write_bytes(props: dict[str, str]) -> int:
+    """Per-task, hence per-output-file, byte target of a bucketed write:
+    the table's ``write.target-file-size-bytes`` when it is a positive
+    integer, else ``TARGET_WRITE_BYTES``. The bytes are ENCODED bytes,
+    Iceberg's output-file-size meaning, compared against Catalyst's size
+    estimate of the input (the on-disk size for a parquet scan), not
+    against raw row width."""
+    try:
+        declared = int(props.get("write.target-file-size-bytes", 0))
+    except (ValueError, TypeError):
+        return TARGET_WRITE_BYTES  # malformed -> default, never a failed write
+    return declared if declared > 0 else TARGET_WRITE_BYTES
+
+
 def auto_bucket_count(df: DataFrame) -> int:
     """Data-size-aware bucket default: one bucket per
     ``TARGET_BUCKET_BYTES`` of estimated input, rounded up to a power of
@@ -1089,12 +1103,9 @@ class LakeTable:
         ``older_than``) on the TABLE, so writers and GC can never
         disagree about the bound."""
         try:
-            props = (
-                self._pending_props
-                if self._pending_props is not None
-                else (self.snapshot().properties if self.exists() else {})
+            declared = float(
+                self._write_props().get("commit.gc-grace-seconds", 0)
             )
-            declared = float(props.get("commit.gc-grace-seconds", 0))
             if declared > 0:
                 return declared
         except (ValueError, TypeError):
@@ -1275,34 +1286,35 @@ class LakeTable:
         self._commit_dir_birth[rel] = time.time()
         return rel
 
-    def _write_parallelism(self, df: DataFrame, n_buckets: int) -> int:
-        """Sub-splits per bucket, sized by DATA VOLUME: enough splits that
-        each write task carries ~``TARGET_WRITE_BYTES``, capped at
-        ``MAX_WRITE_SPLITS``. A small CDC merge stays one task per bucket
-        (sub-splitting it would only fragment files and widen the
-        shuffle); a full-table RTAS fans out to ``n_buckets × splits``
-        tasks. Falls back to core-count/buckets when Catalyst can't size
-        the plan.
+    def _write_props(self) -> dict[str, str]:
+        """The properties a write follows: those an in-flight RTAS is
+        declaring, else the current snapshot's (none before the first
+        commit)."""
+        if self._pending_props is not None:
+            return self._pending_props
+        return self.snapshot().properties if self.exists() else {}
 
-        The per-task byte target defaults to ``TARGET_WRITE_BYTES`` and
-        is overridable per table via ``write.target-file-size-bytes``
-        (Iceberg's property of the same name): a scan-heavy analytics
-        table wants fewer, larger files than a lookup-heavy CDC target,
-        and that choice belongs to the TABLE, not the writing code
-        path."""
-        target = TARGET_WRITE_BYTES
-        try:
-            props = (
-                self._pending_props
-                if self._pending_props is not None
-                else (self.snapshot().properties if self.exists() else {})
-            )
-            declared = int(props.get("write.target-file-size-bytes", 0))
-            if declared > 0:
-                target = declared
-        except (ValueError, TypeError):
-            pass  # malformed property -> default sizing, never a failed write
-        size = plan_size_bytes(df)
+    def _write_parallelism(
+        self, size: int | None, n_buckets: int, target: int
+    ) -> int:
+        """Sub-splits per bucket, sized by DATA VOLUME: enough splits that
+        each write task, hence each output file, carries ~``target``
+        bytes, capped at ``MAX_WRITE_SPLITS``. ``size`` is the input's
+        ENCODED bytes — Catalyst's estimate (:func:`plan_size_bytes`),
+        which for a parquet scan is the on-disk size — so a bucket whose
+        input is under the target is never split: a small CDC merge, or
+        a highly compressible one, stays one task per bucket
+        (sub-splitting it would only fragment files below the target and
+        widen the shuffle); a full-table RTAS fans out to
+        ``n_buckets × splits`` tasks. Falls back to core-count/buckets
+        when Catalyst can't size the plan.
+
+        ``target`` is :func:`target_write_bytes` of the table's
+        properties: ``write.target-file-size-bytes`` (Iceberg's output-
+        file-bytes property of the same name) when declared, else
+        ``TARGET_WRITE_BYTES``. A scan-heavy analytics table wants
+        fewer, larger files than a lookup-heavy CDC target, and that
+        choice belongs to the TABLE, not the writing code path."""
         if size is None:
             cores = self.spark.sparkContext.defaultParallelism
             return max(1, min(MAX_WRITE_SPLITS, -(-cores // max(1, n_buckets))))
@@ -1333,6 +1345,15 @@ class LakeTable:
         task retries deterministic; the distinct seed de-correlates it from
         the bucket id (same-hash mod would put a bucket's rows in one split).
 
+        The byte target is resolved ONCE per call (:func:`target_write_bytes`
+        of the table's properties) and sizes both the sub-splits and the
+        shuffle-task cap. It is in ENCODED bytes, Iceberg's meaning of
+        ``write.target-file-size-bytes``: Catalyst's size estimate of the
+        input, the on-disk size for a parquet scan. Input under the target
+        is never split, and the task cap follows the same target, so a
+        table that declares a small target gets its
+        ``n_buckets × splits`` files even when that exceeds the core count.
+
         ``sort_by`` clusters rows on the given columns within each task's
         slice (``sortWithinPartitions``) so parquet row groups get tight,
         mostly-disjoint min/max ranges — the scan-side payoff is row-group
@@ -1354,7 +1375,9 @@ class LakeTable:
         """
         rel = self._new_commit_dir()
         abs_dir = self.fs.join(self.location, rel)
-        writer_opts = self._writer_options()
+        props = self._write_props()
+        writer_opts = self._writer_options(props)
+        target = target_write_bytes(props)
         if keys and n_buckets > 1 and bucket_weights and not sort_by:
             from itertools import accumulate as _acc
             from statistics import median as _median
@@ -1382,13 +1405,13 @@ class LakeTable:
             except Exception:  # Spark Connect: no SparkContext handle
                 cores = total_combos
             # task-count sizing matches the uniform path (cores, or the
-            # byte-need at TARGET_WRITE_BYTES per task, capped by the
+            # byte-need at the table's target per task, capped by the
             # combo count): the weighted path changes WHICH rows share a
             # task, not how many tasks the write launches — a 4x-cores
             # first cut measured 2x slower on the 1024-bucket fold from
             # pure task-launch overhead (128 near-empty tasks vs 32).
             total_w = sum(bucket_weights.values())
-            need = max(cores, -(-total_w // TARGET_WRITE_BYTES))
+            need = max(cores, -(-total_w // target))
             nparts = max(1, min(total_combos, need))
             staged = df.withColumn("_bucket", bucket_expr(keys, n_buckets))
             key_cols = [
@@ -1424,7 +1447,8 @@ class LakeTable:
             self._harvest_stats(list(d for dirs in out.values() for d in dirs))
             return out
         if keys and n_buckets > 1:
-            splits = self._write_parallelism(df, n_buckets)
+            size = plan_size_bytes(df)
+            splits = self._write_parallelism(size, n_buckets, target)
             # Shuffle-partition count is capped by what the data VOLUME
             # (or, unsized, the core count) actually needs: the
             # ``partitionBy("_bucket")`` writer lets one task emit many
@@ -1434,14 +1458,11 @@ class LakeTable:
             # bucket layout, ~30x fewer task launches and less GC churn.
             # Full-volume writes still fan out to n_buckets × splits.
             want = n_buckets * max(1, splits)
-            size = plan_size_bytes(df)
             try:
                 cores = self.spark.sparkContext.defaultParallelism
             except Exception:  # Spark Connect: no SparkContext handle
                 cores = want
-            need = cores if size is None else max(
-                cores, -(-size // TARGET_WRITE_BYTES)
-            )
+            need = cores if size is None else max(cores, -(-size // target))
             nparts = max(1, min(want, need))
             staged = df.withColumn("_bucket", bucket_expr(keys, n_buckets))
             if (splits > 1 or nparts < want) and sort_by:
@@ -1503,7 +1524,9 @@ class LakeTable:
         self._harvest_stats([rel])
         return {"0": [rel]}
 
-    def _writer_options(self) -> dict[str, str]:
+    def _writer_options(
+        self, props: dict[str, str] | None = None
+    ) -> dict[str, str]:
         """Parquet writer options derived from table properties (the
         Iceberg ``write.parquet.*`` property family), applied to every
         data write — DML, compaction, staging — so layout choices follow
@@ -1520,12 +1543,12 @@ class LakeTable:
           table makes every row group's range overlap every probe).
           Opt-in because they cost write time + file bytes; the ndv
           property sizes the filter per row group (default 100k
-          ≈ 120 KB at 1% fpp)."""
-        props = {}
-        if self._pending_props is not None:
-            props = self._pending_props
-        elif self.exists():
-            props = self.snapshot().properties
+          ≈ 120 KB at 1% fpp).
+
+        ``props`` defaults to :meth:`_write_props`; a caller that already
+        holds them passes them in."""
+        if props is None:
+            props = self._write_props()
         opts: dict[str, str] = {}
         codec = props.get("write.parquet.compression-codec", "").strip()
         if codec:

@@ -137,23 +137,66 @@ def test_conflicting_declared_orders_rejected(spark, catalog):
         t.rewrite_data_files()
 
 
+def _files_per_bucket(table):
+    return {
+        b: sum(
+            len(glob.glob(f"{table.location}/{rel}/*.parquet")) for rel in dirs
+        )
+        for b, dirs in table.snapshot().buckets.items()
+    }
+
+
 def test_target_file_size_property_fans_out_writes(spark, catalog, tmp_path):
-    import glob as _g
-    # parquet-backed input: Catalyst can SIZE the plan, so the per-task
-    # byte target actually drives the split count (in-memory relations
-    # fall back to core-count sizing where the property is moot)
-    rows = [Row(id=i, v="x" * 2000) for i in range(3000)]
-    spark.createDataFrame(rows).write.parquet(str(tmp_path / "in"))
-    df = spark.read.parquet(str(tmp_path / "in"))
-    t = catalog.create_or_replace(
-        "db.small_files", df, key=["id"], n_buckets=2,
-        properties={"write.target-file-size-bytes": "65536"},
+    """``write.target-file-size-bytes`` is Iceberg's output-file size in
+    ENCODED bytes: a bucket's input splits into
+    ``min(MAX_WRITE_SPLITS, ceil(per-bucket input bytes / target))``
+    files, the input bytes being the parquet size Catalyst estimates."""
+    import math
+    import os
+    import random
+
+    from datalake_iceberg_spark.tables import MAX_WRITE_SPLITS
+
+    target, n_buckets = 65536, 2
+
+    def rtas(rows, name):
+        # parquet-backed input: Catalyst can SIZE the plan, so the per-task
+        # byte target actually drives the split count (in-memory relations
+        # fall back to core-count sizing where the property is moot)
+        path = str(tmp_path / name)
+        spark.createDataFrame(rows).write.parquet(path)
+        in_bytes = sum(
+            os.path.getsize(f) for f in glob.glob(f"{path}/*.parquet")
+        )
+        df = spark.read.parquet(path)
+        t = catalog.create_or_replace(
+            f"db.{name}_small_files", df, key=["id"], n_buckets=n_buckets,
+            properties={"write.target-file-size-bytes": str(target)},
+        )
+        t2 = catalog.create_or_replace(
+            f"db.{name}_big_files", df, key=["id"], n_buckets=n_buckets
+        )
+        assert t.read().count() == t2.read().count() == 3000
+        return in_bytes, _files_per_bucket(t), _files_per_bucket(t2)
+
+    # one repeated string: parquet dictionary-encodes it, so ~50 KB of
+    # encoded input sits under the 64 KB target and is never split
+    in_bytes, many, few = rtas(
+        [Row(id=i, v="x" * 2000) for i in range(3000)], "dict"
     )
-    many = len(_g.glob(f"{t.location}/data/*/**/*.parquet", recursive=True))
-    t2 = catalog.create_or_replace("db.big_files", df, key=["id"], n_buckets=2)
-    few = len(_g.glob(f"{t2.location}/data/*/**/*.parquet", recursive=True))
-    assert many > few >= 2
-    assert t.read().count() == t2.read().count() == 3000
+    assert in_bytes // n_buckets < target
+    assert many == few == {str(b): 1 for b in range(n_buckets)}
+
+    # incompressible strings: ~6 MB of encoded input, well past the target,
+    # so every bucket fans out (even past the core count)
+    rnd = random.Random(7)
+    in_bytes, many, few = rtas(
+        [Row(id=i, v=rnd.randbytes(1000).hex()) for i in range(3000)], "rand"
+    )
+    splits = min(MAX_WRITE_SPLITS, math.ceil(in_bytes // n_buckets / target))
+    assert splits > 1
+    assert many == {str(b): splits for b in range(n_buckets)}
+    assert sum(many.values()) > sum(few.values()) >= 2
 
 
 # ------------------------------------------------------ CHECK constraints
