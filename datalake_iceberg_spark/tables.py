@@ -44,6 +44,8 @@ import uuid
 from collections import OrderedDict
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
+from itertools import accumulate
+from statistics import median
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -328,6 +330,30 @@ def _exact_partition_col(combo, nparts: int):
     tokens = exact_shuffle_tokens(nparts)
     lut = F.array(*[F.lit(t) for t in tokens])
     return F.element_at(lut, F.pmod(combo, F.lit(nparts)).cast("int") + 1)
+
+
+def _split_combo(keys: list[str], splits: list[int]):
+    """Int column: each row's dense (bucket, sub-split) combo id for
+    :func:`_exact_partition_col`. Bucket ``b`` owns the ``splits[b]`` ids
+    from ``Σ splits[:b]``; a row takes the one its split hash picks. The
+    split hash is the KEY hash under a seed of its own: deterministic for
+    task retries (not random), and de-correlated from the bucket id (the
+    bucket hash mod would put a bucket's rows in one split). When no
+    bucket splits, no split hash is computed."""
+    b = F.col("_bucket").cast("int")
+
+    def lut(vals):
+        return F.element_at(F.array(*[F.lit(v) for v in vals]), b + 1)
+
+    offsets = list(accumulate([0] + splits[:-1]))
+    off = b if offsets == list(range(len(splits))) else lut(offsets)
+    if max(splits) <= 1:
+        return off
+    # a bucket without splits gets modulus 1: a stray row lands on its
+    # offset instead of a null pmod crashing the write
+    sb = lut(max(1, s) for s in splits)
+    key_cols = [F.coalesce(F.col(k).cast("string"), F.lit("\x00null")) for k in keys]
+    return off + F.pmod(F.xxhash64(F.lit("_split_seed"), *key_cols), sb).cast("int")
 
 
 def plan_size_bytes(df: DataFrame) -> int | None:
@@ -1294,6 +1320,14 @@ class LakeTable:
             return self._pending_props
         return self.snapshot().properties if self.exists() else {}
 
+    def _cores(self) -> int | None:
+        """The session's default parallelism, or None under Spark Connect
+        (no SparkContext handle); each caller picks its own fallback."""
+        try:
+            return self.spark.sparkContext.defaultParallelism
+        except Exception:  # Spark Connect: no SparkContext handle
+            return None
+
     def _write_parallelism(
         self, size: int | None, n_buckets: int, target: int
     ) -> int:
@@ -1316,7 +1350,7 @@ class LakeTable:
         fewer, larger files than a lookup-heavy CDC target, and that
         choice belongs to the TABLE, not the writing code path."""
         if size is None:
-            cores = self.spark.sparkContext.defaultParallelism
+            cores = self._cores() or 1
             return max(1, min(MAX_WRITE_SPLITS, -(-cores // max(1, n_buckets))))
         per_bucket = size // max(1, n_buckets)
         return max(1, min(MAX_WRITE_SPLITS, -(-per_bucket // target)))
@@ -1335,194 +1369,113 @@ class LakeTable:
         Returns bucket -> [relative dir]. The bucket id is derived from the
         key hash; it lives in the directory name only (``_bucket=k``), never
         in the data files — readers don't pay for it, and rewrites re-derive
-        it from the manifest.
+        it from the manifest. An unkeyed or one-bucket table writes one
+        flat dir, reported as bucket ``"0"``.
 
-        Write parallelism is ``n_buckets × sub-splits``, not ``n_buckets``:
-        rows are shuffled on (``_bucket``, ``_split``) where ``_split`` is a
-        deterministic hash of the key mixed with a distinct seed, so a
-        16-bucket table still writes with every core (multiple files per
-        bucket dir). Sub-splitting keys on the KEY hash (not random) keeps
-        task retries deterministic; the distinct seed de-correlates it from
-        the bucket id (same-hash mod would put a bucket's rows in one split).
+        Every keyed write is one staging plan over a SPLIT VECTOR: bucket
+        ``b`` gets ``splits[b]`` sub-splits, so a 16-bucket table still
+        writes with every core (several files per bucket dir).
 
-        The byte target is resolved ONCE per call (:func:`target_write_bytes`
-        of the table's properties) and sizes both the sub-splits and the
-        shuffle-task cap. It is in ENCODED bytes, Iceberg's meaning of
-        ``write.target-file-size-bytes``: Catalyst's size estimate of the
-        input, the on-disk size for a parquet scan. Input under the target
-        is never split, and the task cap follows the same target, so a
-        table that declares a small target gets its
-        ``n_buckets × splits`` files even when that exceeds the core count.
+        - Default: every bucket gets :meth:`_write_parallelism` splits,
+          sized from the input's ENCODED bytes against the table's byte
+          target (:func:`target_write_bytes`, Iceberg's meaning of
+          ``write.target-file-size-bytes``: Catalyst's size estimate of the
+          input, the on-disk size for a parquet scan). Input under the
+          target is never split.
+        - ``bucket_weights`` (bucket id -> manifest #bytes of that
+          bucket's input): a bucket heavier than the median gets
+          ceil(weight/median) splits, so every task carries ~one median
+          bucket of bytes, and buckets without a weight get none. A
+          rewrite of a skewed SUBSET of buckets (the merge-on-read fold)
+          otherwise runs one task per bucket with task weight = bucket
+          content — the measured 3.5-3.7x max/median skew. The task
+          count still follows the rule below: a 4x-cores first cut
+          measured 2x slower on a 1024-bucket fold from task-launch
+          overhead alone.
 
-        ``sort_by`` clusters rows on the given columns within each task's
-        slice (``sortWithinPartitions``) so parquet row groups get tight,
+        The task count is ``min(Σ splits, max(cores, ⌈bytes/target⌉))``
+        under the same target, so a table that declares a small target
+        gets its ``Σ splits`` files even past the core count, while a
+        small delta into many buckets (150 CDC keys into 1024 buckets)
+        shuffles into ~cores tasks, not near-empty ones: the
+        bucket-partitioned writer lets one task emit many bucket dirs.
+
+        Rows reach tasks by ONE exchange. With ``sort_by``, when the write
+        splits or is capped, it is a RANGE split on (``_bucket``, sort
+        keys), so each task holds a contiguous slice and files keep
+        pairwise-disjoint extents per bucket (a hash split would scatter
+        adjacent sort keys across files and void row-group pruning).
+        Otherwise each row's dense (bucket, split) combo (:func:`_split_combo`)
+        is placed on task ``combo % tasks`` exactly, so residual spread is
+        intra-bucket only.
+
+        ``sort_by`` then clusters rows within each task's slice
+        (``sortWithinPartitions``) so parquet row groups get tight,
         mostly-disjoint min/max ranges — the scan-side payoff is row-group
         pruning for pushed-down range predicates. ``drop_after_sort``
         removes synthetic sort keys (e.g. a z-value) after ordering, before
         the write — a projection after sort keeps row order.
 
-        ``bucket_weights`` (r16 skew fix, bucket id -> manifest #bytes of
-        that bucket's input) switches to WEIGHT-AWARE sub-splitting: a
-        bucket heavier than the median gets ceil(weight/median) key-hash
-        sub-splits so every write task carries ~one median bucket of
-        bytes. The byte-volume splits above are uniform per bucket and
-        assume even fill; a rewrite whose input is a skewed SUBSET of
-        buckets (the MoR fold rewrites exactly the delete-bearing ones,
-        whose content the workload made uneven) otherwise runs one task
-        per bucket with task weight = bucket content — the measured
-        3.5-3.7x max/median skew band finding. Exact combo->partition
-        placement as below, so residual spread is intra-bucket only.
+        The write itself is :meth:`_write_dirs`, the one tail of every
+        bucket-dir write, so the table's ``write.parquet.*`` options apply
+        to all of them.
         """
-        rel = self._new_commit_dir()
-        abs_dir = self.fs.join(self.location, rel)
         props = self._write_props()
-        writer_opts = self._writer_options(props)
-        target = target_write_bytes(props)
-        if keys and n_buckets > 1 and bucket_weights and not sort_by:
-            from itertools import accumulate as _acc
-            from statistics import median as _median
-
-            med = max(1, int(_median(bucket_weights.values())))
-            # combo ids are DENSE over the weighted (= actually present)
-            # buckets so combo % nparts is exact placement, not
-            # balls-into-bins; absent buckets get 0 splits and can never
-            # contribute rows (the caller passes weights for exactly the
-            # buckets it reads). greatest(sb, 1) keeps a stray row from
-            # a null pmod instead of crashing the write.
-            s_list = [
-                (
-                    max(1, min(MAX_WRITE_SPLITS,
-                               -(-bucket_weights[b] // med)))
-                    if b in bucket_weights
-                    else 0
-                )
-                for b in range(n_buckets)
-            ]
-            off_list = [0] + list(_acc(s_list[:-1]))
-            total_combos = sum(s_list) or 1
-            try:
-                cores = self.spark.sparkContext.defaultParallelism
-            except Exception:  # Spark Connect: no SparkContext handle
-                cores = total_combos
-            # task-count sizing matches the uniform path (cores, or the
-            # byte-need at the table's target per task, capped by the
-            # combo count): the weighted path changes WHICH rows share a
-            # task, not how many tasks the write launches — a 4x-cores
-            # first cut measured 2x slower on the 1024-bucket fold from
-            # pure task-launch overhead (128 near-empty tasks vs 32).
-            total_w = sum(bucket_weights.values())
-            need = max(cores, -(-total_w // target))
-            nparts = max(1, min(total_combos, need))
-            staged = df.withColumn("_bucket", bucket_expr(keys, n_buckets))
-            key_cols = [
-                F.coalesce(F.col(k).cast("string"), F.lit("\x00null"))
-                for k in keys
-            ]
-            b_idx = F.col("_bucket").cast("int") + 1
-            sb_col = F.greatest(
-                F.element_at(F.array(*[F.lit(s) for s in s_list]), b_idx),
-                F.lit(1),
-            )
-            off_col = F.element_at(
-                F.array(*[F.lit(o) for o in off_list]), b_idx
-            )
-            combo = off_col + F.pmod(
-                F.xxhash64(F.lit("_split_seed"), *key_cols), sb_col
-            ).cast("int")
-            staged = (
-                staged.withColumn("_pt", _exact_partition_col(combo, nparts))
-                .repartition(nparts, "_pt")
-                .drop("_pt", *(drop_after_sort or []))
-            )
-            (
-                staged.write.partitionBy("_bucket")
-                .mode("overwrite")
-                .options(**writer_opts)
-                .parquet(abs_dir)
-            )
-            out: dict[str, list[str]] = {}
-            for entry in sorted(self.fs.listdir(abs_dir)):
-                if entry.startswith("_bucket="):
-                    out[entry.split("=", 1)[1]] = [f"{rel}/{entry}"]
-            self._harvest_stats(list(d for dirs in out.values() for d in dirs))
-            return out
-        if keys and n_buckets > 1:
-            size = plan_size_bytes(df)
-            splits = self._write_parallelism(size, n_buckets, target)
-            # Shuffle-partition count is capped by what the data VOLUME
-            # (or, unsized, the core count) actually needs: the
-            # ``partitionBy("_bucket")`` writer lets one task emit many
-            # bucket dirs, so a high-bucket table writing a small delta
-            # (150 CDC keys into 1024 buckets) shuffles into ~cores
-            # tasks, not n_buckets near-empty ones — same one-file-per-
-            # bucket layout, ~30x fewer task launches and less GC churn.
-            # Full-volume writes still fan out to n_buckets × splits.
-            want = n_buckets * max(1, splits)
-            try:
-                cores = self.spark.sparkContext.defaultParallelism
-            except Exception:  # Spark Connect: no SparkContext handle
-                cores = want
+        bucketed = bool(keys) and n_buckets > 1
+        if bucketed:
+            target = target_write_bytes(props)
+            if bucket_weights:
+                med = max(1, int(median(bucket_weights.values())))
+                splits = [
+                    max(1, min(MAX_WRITE_SPLITS, -(-bucket_weights[b] // med)))
+                    if b in bucket_weights else 0
+                    for b in range(n_buckets)
+                ]
+                size = sum(bucket_weights.values())
+            else:
+                size = plan_size_bytes(df)
+                splits = [self._write_parallelism(size, n_buckets, target)] * n_buckets
+            want = sum(splits) or 1
+            cores = self._cores() or want
             need = cores if size is None else max(cores, -(-size // target))
             nparts = max(1, min(want, need))
-            staged = df.withColumn("_bucket", bucket_expr(keys, n_buckets))
-            if (splits > 1 or nparts < want) and sort_by:
-                # clustered write: RANGE-split on (_bucket, sort keys) so
-                # each task holds a contiguous slice — files stay sorted
-                # with pairwise-DISJOINT extents per bucket (hash
-                # sub-splitting would scatter adjacent sort keys across
-                # files and void row-group pruning)
-                staged = staged.repartitionByRange(
-                    nparts, "_bucket", *sort_by
-                )
-            elif splits > 1:
-                key_cols = [
-                    F.coalesce(F.col(k).cast("string"), F.lit("\x00null")) for k in keys
-                ]
-                split_col = F.pmod(
-                    F.xxhash64(F.lit("_split_seed"), *key_cols), F.lit(splits)
-                ).cast("int")
-                # EXACT task placement: hashing the (bucket, split)
-                # tuple into ~as many partitions is balls-into-bins
-                # (r14 sf1 capture: 3.7x task skew on the merge write,
-                # some tasks empty, others carrying 2-3 combos). Route
-                # combo -> partition combo % nparts via the pre-imaged
-                # hash tokens instead: every task gets the same number
-                # of combos (±1), and residual skew reflects only true
-                # per-bucket row imbalance.
-                combo = (
-                    F.col("_bucket").cast("int") * F.lit(splits) + split_col
-                )
-                staged = staged.withColumn(
-                    "_pt", _exact_partition_col(combo, nparts)
-                ).repartition(nparts, "_pt").drop("_pt")
+            df = df.withColumn("_bucket", bucket_expr(keys, n_buckets))
+            if sort_by and (max(splits) > 1 or nparts < want):
+                df = df.repartitionByRange(nparts, "_bucket", *sort_by)
             else:
-                staged = staged.withColumn(
-                    "_pt",
-                    _exact_partition_col(F.col("_bucket").cast("int"), nparts),
+                df = df.withColumn(
+                    "_pt", _exact_partition_col(_split_combo(keys, splits), nparts)
                 ).repartition(nparts, "_pt").drop("_pt")
-            if sort_by:
-                staged = staged.sortWithinPartitions("_bucket", *sort_by)
-            if drop_after_sort:
-                staged = staged.drop(*drop_after_sort)
-            (
-                staged.write.partitionBy("_bucket")
-                .mode("overwrite")
-                .options(**writer_opts)
-                .parquet(abs_dir)
-            )
-            out: dict[str, list[str]] = {}
-            for entry in sorted(self.fs.listdir(abs_dir)):
-                if entry.startswith("_bucket="):
-                    out[entry.split("=", 1)[1]] = [f"{rel}/{entry}"]
-            self._harvest_stats(list(d for dirs in out.values() for d in dirs))
-            return out
         if sort_by:
-            df = df.sortWithinPartitions(*sort_by)
+            df = df.sortWithinPartitions(*(["_bucket"] if bucketed else []), *sort_by)
         if drop_after_sort:
             df = df.drop(*drop_after_sort)
-        df.write.mode("overwrite").options(**writer_opts).parquet(abs_dir)
-        self._harvest_stats([rel])
-        return {"0": [rel]}
+        return self._write_dirs(df, bucketed, props)
+
+    def _write_dirs(
+        self, df: DataFrame, bucketed: bool = True,
+        props: dict[str, str] | None = None,
+    ) -> dict[str, list[str]]:
+        """The one tail of every Spark data-dir write: a fresh commit dir, the
+        table's ``write.parquet.*`` options (:meth:`_writer_options`), a
+        parquet write partitioned by the ``_bucket`` column (or, not
+        ``bucketed``, one flat dir reported as bucket ``"0"``), then the
+        new dirs' footer stats. Returns bucket -> [relative dir]."""
+        rel = self._new_commit_dir()
+        abs_dir = self.fs.join(self.location, rel)
+        writer = df.write.mode("overwrite").options(**self._writer_options(props))
+        if bucketed:
+            writer.partitionBy("_bucket").parquet(abs_dir)
+            out = {
+                e.split("=", 1)[1]: [f"{rel}/{e}"]
+                for e in sorted(self.fs.listdir(abs_dir))
+                if e.startswith("_bucket=")
+            }
+        else:
+            writer.parquet(abs_dir)
+            out = {"0": [rel]}
+        self._harvest_stats([d for dirs in out.values() for d in dirs])
+        return out
 
     def _writer_options(
         self, props: dict[str, str] | None = None
@@ -1812,9 +1765,7 @@ class LakeTable:
         if as_of is not None:
             version = self.version_as_of(as_of)
         snap = self.snapshot(version)
-        if snap.deletes:
-            return self._read_with_deletes(snap, snap.buckets)
-        return self._read_dirs(snap.all_dirs(), snap)
+        return self._read_with_deletes(snap, snap.buckets)
 
     def _fsck_segments(self) -> list[dict]:
         """Segmented-manifest layer audit: every segment referenced by
@@ -2620,15 +2571,10 @@ class LakeTable:
         only when some branch can match its stats. The exact predicate
         is re-applied on the surviving data."""
         snap = self.snapshot(version)
-        dirs = self.candidate_dirs(filters, version)
-        if snap.deletes:
-            keep = set(dirs)
-            df = self._read_with_deletes(
-                snap,
-                {b: [d for d in ds if d in keep] for b, ds in snap.buckets.items()},
-            )
-        else:
-            df = self._read_dirs(dirs, snap)
+        keep = set(self.candidate_dirs(filters, snap.version))
+        df = self._read_with_deletes(
+            snap, {b: [d for d in ds if d in keep] for b, ds in snap.buckets.items()}
+        )
         cond = _dnf_expr(_norm_dnf(filters))
         return df.filter(cond) if cond is not None else df
 
@@ -2642,7 +2588,7 @@ class LakeTable:
         declaration + compaction, not a bigger cluster)."""
         snap = self.snapshot(version)
         all_dirs = snap.all_dirs()
-        kept = set(self.candidate_dirs(filters, version))
+        kept = set(self.candidate_dirs(filters, snap.version))
         dnf = _norm_dnf(filters)
 
         def _keys(d: str) -> list[str]:
@@ -3219,7 +3165,7 @@ class LakeTable:
         # UNMATCHED and inserts in full — pinned by
         # tests/test_mor_merge.py).
         affected = self._affected_buckets(source.select(*snap.key), snap)
-        target = self.read_buckets(affected)
+        target = self.read_buckets(affected, snap.version)
         upd = set(update_columns)
         carried = [n for n in names if n not in snap.key and n not in upd]
         # helper-column names carry a per-call unique tag so a table
@@ -3265,12 +3211,12 @@ class LakeTable:
         on unkeyed tables."""
         snap = self.snapshot(version)
         if not snap.key:
-            return self.read(version).join(
+            return self.read(snap.version).join(
                 keys_df.distinct(), on=list(keys_df.columns), how="left_semi"
             )
         keys_df = keys_df.select(*snap.key).distinct()
         affected = self._affected_buckets(keys_df, snap)
-        pruned = self.read_buckets(affected, version)
+        pruned = self.read_buckets(affected, snap.version)
         if len(snap.key) == 1:
             # single-column key: the lookup IS an IN-list predicate, and
             # expressing it as one pushes it into the parquet scan where
@@ -3572,11 +3518,7 @@ class LakeTable:
             # launches that also bimodalize the write's map stage (half
             # heavy rewrite tasks, half trivial batch tasks — the
             # residual "skew" reading of the r14 sf1 merge capture).
-            try:
-                cores = self.spark.sparkContext.defaultParallelism
-            except Exception:  # Spark Connect: no SparkContext handle
-                cores = 32
-            k = max(1, min(cores, -(-n_up // UNION_LEG_ROWS_PER_TASK)))
+            k = max(1, min(self._cores() or 32, -(-n_up // UNION_LEG_ROWS_PER_TASK)))
             return merged.unionByName(_upsert_rows(batch).coalesce(k))
 
         return self._cow_rewrite(snap, touched, kept, upsert, operation, {},
@@ -3967,6 +3909,9 @@ class LakeTable:
           its own bucket locally and the dynamic-partition writer fans
           out — at 100 TB every byte moves once through local disks,
           never across the network. MoR deletes fold in via the read.
+          It writes through :meth:`_write_dirs`, the tail every
+          bucket-dir write shares, so the table's ``write.parquet.*``
+          options apply here as everywhere.
         - **Arbitrary count**: full shuffled bucketed write (same path
           as RTAS).
 
@@ -3993,24 +3938,14 @@ class LakeTable:
                 deletes.setdefault(nb, []).extend(entries)
             renames = {d: dict(m) for d, m in snap.renames.items()}
         else:
-            df = self.read()  # folds MoR deletes, applies renames
+            df = self.read(snap.version)  # folds MoR deletes, applies renames
             if new_n_buckets % snap.n_buckets == 0:
                 # local split: NO repartition before the write — each
                 # input task holds one old bucket and writes its k new
                 # sub-buckets via dynamic partitioning (no exchange)
-                rel = self._new_commit_dir()
-                abs_dir = self.fs.join(self.location, rel)
-                (
+                buckets = self._write_dirs(
                     df.withColumn("_bucket", bucket_expr(snap.key, new_n_buckets))
-                    .write.partitionBy("_bucket")
-                    .mode("overwrite")
-                    .parquet(abs_dir)
                 )
-                buckets = {}
-                for entry in sorted(self.fs.listdir(abs_dir)):
-                    if entry.startswith("_bucket="):
-                        buckets[entry.split("=", 1)[1]] = [f"{rel}/{entry}"]
-                self._harvest_stats([d for dirs in buckets.values() for d in dirs])
             else:
                 buckets = self._write_bucketed(df, snap.key, new_n_buckets)
             deletes = {}  # folded into the rewrite by the read

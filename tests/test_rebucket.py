@@ -11,6 +11,8 @@ and that reads, point lookups, and DML all follow the new layout.
 
 from __future__ import annotations
 
+import uuid
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -36,11 +38,23 @@ def _content_hash(df):
     )
 
 
-def test_grow_multiple_is_local_split(orders_table):
+def test_grow_multiple_is_local_split(orders_table, spark):
     table, orders = orders_table
     before_rows = table.read().count()
     before_hash = _content_hash(table.read())
-    table.rebucket(32)
+    # shuffle-free: every job the grow runs is one stage (an exchange
+    # would add a map stage, skipped or not, to the writing job)
+    sc = spark.sparkContext
+    group = f"grow-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "rebucket grow")
+    try:
+        table.rebucket(32)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    assert jobs
+    assert [len(tracker.getJobInfo(j).stageIds) for j in jobs] == [1] * len(jobs)
     snap = table.snapshot()
     assert snap.n_buckets == 32
     assert snap.operation == "rebucket"

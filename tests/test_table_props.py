@@ -41,6 +41,7 @@ def test_compression_codec_property_applies_to_all_writes(catalog, spark):
     t.rewrite_data_files()
     t.expire_snapshots()
     t.remove_orphan_files(older_than_s=0.0)
+    t.rebucket(8)  # a 4 -> 8 grow: the shuffle-free local split
     assert _codecs(t) == {"ZSTD"}
     assert {r["v"] for r in t.lookup(
         spark.createDataFrame([Row(id=0)])).collect()} == {"patched"}

@@ -327,6 +327,58 @@ def test_concurrent_same_key_merges_linearizable(catalog, spark):
     assert got[7] in winners  # final value belongs to a SUCCESSFUL writer
 
 
+def _commit_after_first_load(monkeypatch, table, concurrent):
+    """Run ``concurrent()`` (a commit through another handle) right after
+    ``table``'s first snapshot load, so any second load inside the same
+    call sees the newer version."""
+    from datalake_iceberg_spark.tables import LakeTable
+
+    orig = LakeTable.snapshot
+    fired = []
+
+    def snapshot(self, version=None):
+        snap = orig(self, version)
+        if self is table and not fired:
+            fired.append(snap.version)
+            concurrent()
+        return snap
+
+    monkeypatch.setattr(LakeTable, "snapshot", snapshot)
+    return fired
+
+
+def test_scan_plans_from_one_snapshot(catalog, spark, monkeypatch):
+    """A scan resolves its dirs and delete eras from the snapshot it
+    loaded: a copy-on-write merge committing mid-plan must not drop the
+    rewritten bucket's rows from the scan."""
+    df = spark.createDataFrame([Row(k=i, v=f"v{i}") for i in range(200)])
+    t = catalog.create_or_replace("db.scan_race", df, key=["k"], n_buckets=4)
+    t.delete_keys(spark.createDataFrame([Row(k=i) for i in range(0, 200, 20)]),
+                  mode="merge-on-read")  # a live delete era
+    expected = _rows(t.read())
+    assert len(expected) == 190
+    other = catalog.table("db.scan_race")
+    fired = _commit_after_first_load(monkeypatch, t, lambda: other.merge(
+        spark.createDataFrame([Row(k=5, v="new")])))
+    got = _rows(t.scan([("k", ">=", 0)]))
+    assert fired and other.current_version() == fired[0] + 1
+    assert got == expected
+
+
+def test_lookup_plans_from_one_snapshot(catalog, spark, monkeypatch):
+    """A lookup reads the buckets it computed from the snapshot it
+    loaded: a rebucket committing mid-plan must not make it read the
+    same bucket ids under the new layout."""
+    df = spark.createDataFrame([Row(k=i, v=f"v{i}") for i in range(200)])
+    t = catalog.create_or_replace("db.lookup_race", df, key=["k"], n_buckets=4)
+    other = catalog.table("db.lookup_race")
+    fired = _commit_after_first_load(monkeypatch, t, lambda: other.rebucket(8))
+    keys = spark.createDataFrame([Row(k=i) for i in range(0, 200, 10)])
+    got = _rows(t.lookup(keys))
+    assert fired and other.snapshot().n_buckets == 8
+    assert got == {(i, f"v{i}") for i in range(0, 200, 10)}
+
+
 def test_gc_grace_protects_inflight_writer_dirs(catalog, spark):
     """The in-flight-writer window (r11): a commit writes its data/c-*
     dir BEFORE publishing the manifest that references it, so a
