@@ -39,6 +39,7 @@ import functools
 import json
 import os
 import re
+import struct
 import time
 import uuid
 from collections import OrderedDict
@@ -269,14 +270,92 @@ def _commit_dir_of(rel_dir: str) -> str:
     return head if tail.startswith("_bucket=") else rel_dir
 
 
+#: ``bucket_expr``'s stand-in for a NULL key column
+_NULL_KEY = "\x00null"
+
+
 def bucket_expr(keys: list[str], n_buckets: int):
     """Deterministic bucket id for a key tuple.
 
     ``xxhash64`` is a Spark built-in (JVM-side, codegen) — no Python UDF
     on the hot path. Null-safe via coalesce-to-sentinel string.
+    ``_bucket_of`` computes the same id on the driver for key values
+    already in hand; ``tests/test_lookup_routing.py`` pins the two
+    together, so a change here must change both.
     """
-    cols = [F.coalesce(F.col(k).cast("string"), F.lit("\x00null")) for k in keys]
+    cols = [F.coalesce(F.col(k).cast("string"), F.lit(_NULL_KEY)) for k in keys]
     return F.pmod(F.xxhash64(*cols), F.lit(n_buckets)).cast("int")
+
+
+#: key column types whose Python ``str()`` equals Spark's string cast —
+#: only these route on the driver; the rest (double, decimal, date,
+#: timestamp, boolean, binary, ...) keep ``bucket_expr``'s Spark job
+_ROUTABLE_KEY_TYPES = (
+    T.StringType(), T.LongType(), T.IntegerType(), T.ShortType(), T.ByteType(),
+)
+_M64 = (1 << 64) - 1
+_XXP1 = 0x9E3779B185EBCA87
+_XXP2 = 0xC2B2AE3D27D4EB4F
+_XXP3 = 0x165667B19E3779F9
+_XXP4 = 0x85EBCA77C2B2AE63
+_XXP5 = 0x27D4EB2F165667C5
+
+
+def _rotl64(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _xxh64_round(acc: int, lane: int) -> int:
+    return (_rotl64((acc + lane * _XXP2) & _M64, 31) * _XXP1) & _M64
+
+
+def _xxh64(data: bytes, seed: int) -> int:
+    """XXH64 of ``data`` (unsigned 64-bit), as Spark's ``XXH64``
+    computes it over a string's UTF-8 bytes: little-endian lanes, 32-byte
+    stripes, then 8-, 4- and 1-byte tails and the final avalanche."""
+    n, i = len(data), 0
+    seed &= _M64
+    if n >= 32:
+        v1 = (seed + _XXP1 + _XXP2) & _M64
+        v2 = (seed + _XXP2) & _M64
+        v3 = seed
+        v4 = (seed - _XXP1) & _M64
+        while i + 32 <= n:
+            a, b, c, d = struct.unpack_from("<4Q", data, i)
+            v1, v2 = _xxh64_round(v1, a), _xxh64_round(v2, b)
+            v3, v4 = _xxh64_round(v3, c), _xxh64_round(v4, d)
+            i += 32
+        h = (_rotl64(v1, 1) + _rotl64(v2, 7) + _rotl64(v3, 12) + _rotl64(v4, 18)) & _M64
+        for v in (v1, v2, v3, v4):
+            h = ((h ^ _xxh64_round(0, v)) * _XXP1 + _XXP4) & _M64
+    else:
+        h = (seed + _XXP5) & _M64
+    h = (h + n) & _M64
+    while i + 8 <= n:
+        (lane,) = struct.unpack_from("<Q", data, i)
+        h = (_rotl64(h ^ _xxh64_round(0, lane), 27) * _XXP1 + _XXP4) & _M64
+        i += 8
+    if i + 4 <= n:
+        (lane,) = struct.unpack_from("<I", data, i)
+        h = (_rotl64(h ^ ((lane * _XXP1) & _M64), 23) * _XXP2 + _XXP3) & _M64
+        i += 4
+    for byte in data[i:]:
+        h = (_rotl64(h ^ ((byte * _XXP5) & _M64), 11) * _XXP1) & _M64
+    h = ((h ^ (h >> 33)) * _XXP2) & _M64
+    h = ((h ^ (h >> 29)) * _XXP3) & _M64
+    return h ^ (h >> 32)
+
+
+def _bucket_of(values: tuple, n_buckets: int) -> int:
+    """``bucket_expr`` of one key tuple, computed on the driver: Spark's
+    ``xxhash64`` chained column by column from seed 42 over the UTF-8
+    bytes of each value's string cast (``_NULL_KEY`` for None), then
+    ``pmod``. Exact only for ``_ROUTABLE_KEY_TYPES`` values."""
+    h = 42
+    for v in values:
+        h = _xxh64((_NULL_KEY if v is None else str(v)).encode("utf-8"), h)
+    # the chained hash is a signed Java long; Python's % is already pmod
+    return (h - (1 << 64) if h >> 63 else h) % n_buckets
 
 
 def _murmur3_hash_int(value: int, seed: int = 42) -> int:
@@ -352,7 +431,7 @@ def _split_combo(keys: list[str], splits: list[int]):
     # a bucket without splits gets modulus 1: a stray row lands on its
     # offset instead of a null pmod crashing the write
     sb = lut(max(1, s) for s in splits)
-    key_cols = [F.coalesce(F.col(k).cast("string"), F.lit("\x00null")) for k in keys]
+    key_cols = [F.coalesce(F.col(k).cast("string"), F.lit(_NULL_KEY)) for k in keys]
     return off + F.pmod(F.xxhash64(F.lit("_split_seed"), *key_cols), sb).cast("int")
 
 
@@ -3208,14 +3287,33 @@ class LakeTable:
         payoff of the bucket layout (at 1000 buckets, a 10-key lookup
         reads ≤ 10/1000 of the table; same pruning Iceberg gets from
         hidden bucket partitioning). Falls back to a full-scan semi-join
-        on unkeyed tables."""
+        on unkeyed tables.
+
+        Routing: when every key column of ``keys_df`` is string, long,
+        int, short or byte (``_ROUTABLE_KEY_TYPES``: Python's ``str()``
+        equals Spark's string cast only for these), one capped probe
+        collects at most ``MAX_PUSHED_LOOKUP_KEYS`` + 1 key rows and,
+        at or under the cap, ``_bucket_of`` computes their buckets on
+        the driver, like any client of Iceberg's bucket transform — no
+        ``distinct`` or bucket job runs before the read. Over the cap,
+        and for any other key type, the buckets come from a Spark job
+        (``_affected_buckets``) and the probe side stays distributed.
+        A single-column key with its values in hand reads through an
+        IN-list; every other case is a semi-join against ``keys_df``."""
         snap = self.snapshot(version)
         if not snap.key:
             return self.read(snap.version).join(
                 keys_df.distinct(), on=list(keys_df.columns), how="left_semi"
             )
-        keys_df = keys_df.select(*snap.key).distinct()
-        affected = self._affected_buckets(keys_df, snap)
+        probe = keys_df.select(*snap.key)
+        rows = None
+        if all(f.dataType in _ROUTABLE_KEY_TYPES for f in probe.schema.fields):
+            rows = probe.limit(MAX_PUSHED_LOOKUP_KEYS + 1).collect()
+        probe = probe.distinct()
+        if rows is not None and len(rows) <= MAX_PUSHED_LOOKUP_KEYS:
+            affected = sorted({_bucket_of(tuple(r), snap.n_buckets) for r in rows})
+        else:
+            affected = self._affected_buckets(probe, snap)
         pruned = self.read_buckets(affected, snap.version)
         if len(snap.key) == 1:
             # single-column key: the lookup IS an IN-list predicate, and
@@ -3228,10 +3326,11 @@ class LakeTable:
             # groups), so collect AT MOST cap+1 rows to decide — never
             # the whole set — and past the cap fall through to a
             # distributed semi-join.
-            k = snap.key[0]
-            vals = [r[0] for r in keys_df.limit(MAX_PUSHED_LOOKUP_KEYS + 1).collect()]
-            if len(vals) <= MAX_PUSHED_LOOKUP_KEYS:
-                return pruned.where(F.col(k).isin(vals))
+            if rows is None:
+                rows = probe.limit(MAX_PUSHED_LOOKUP_KEYS + 1).collect()
+            if len(rows) <= MAX_PUSHED_LOOKUP_KEYS:
+                vals = list(dict.fromkeys(r[0] for r in rows))
+                return pruned.where(F.col(snap.key[0]).isin(vals))
         # over-cap / composite-key path: no forced broadcast — the probe
         # side's size is unknown and can be GBs at 100 TB scale, where a
         # forced broadcast pins the driver and every executor. AQE sees
@@ -3239,7 +3338,7 @@ class LakeTable:
         # broadcast vs shuffle itself (same reasoning as the
         # DELETE_BROADCAST_MAX_BYTES gate on the MoR read path; Iceberg
         # likewise leaves read-side join strategy to the engine).
-        return pruned.join(keys_df, on=snap.key, how="left_semi")
+        return pruned.join(probe, on=snap.key, how="left_semi")
 
     def _affected_buckets(self, source: DataFrame, snap: Snapshot) -> list[int]:
         if snap.n_buckets <= 1:

@@ -49,7 +49,7 @@ def test_dual_catalog_migration(spark, tmp_path):
 
 
 def test_point_lookup_prunes_buckets(spark, tmp_path):
-    from datalake_iceberg_spark.tables import bucket_expr
+    from datalake_iceberg_spark.tables import _bucket_of, bucket_expr
 
     cat = LakeCatalog(spark, str(tmp_path / "wh_lookup"))
     df = spark.range(1000).select(
@@ -64,6 +64,9 @@ def test_point_lookup_prunes_buckets(spark, tmp_path):
     # pruning is real: the affected-bucket set is smaller than the table
     affected = t._affected_buckets(keys, t.snapshot())
     assert 1 <= len(affected) <= 3 < 16
+    # lookup routes these keys on the driver; the Spark bucket job that
+    # still serves over-cap probes must name the same buckets
+    assert sorted({_bucket_of((k,), 16) for k in (7, 423, 999)}) == affected
 
     # lookup of an absent key returns nothing
     assert t.lookup(spark.createDataFrame([(123456,)], "pk long")).count() == 0
