@@ -1775,7 +1775,13 @@ class LakeTable:
         match a row outside bucket X; and within one commit every delete
         dir of a bucket carries identical ``covers`` (see
         ``_keyed_mor``), so the commit-level signature is exact.
-        Dirs no delete covers take the plain fast path."""
+        Dirs no delete covers take the plain fast path. Every piece keeps
+        the table's column order (a USING anti-join alone moves the key
+        columns first), whichever dirs an era covers.
+
+        The one read exit: reads, DML and compaction plan their dirs
+        with ``_split_dirs`` (metadata aggregates with
+        ``_masked_buckets``) and read them here."""
         plain: list[str] = []
         groups: dict[frozenset, tuple[list[str], set[str]]] = {}
         for b, dirs in bucket_dirs.items():
@@ -1814,10 +1820,9 @@ class LakeTable:
             # size at runtime
             if self._dirs_bytes(del_dirs, snap.stats) <= DELETE_BROADCAST_MAX_BYTES:
                 dkeys = F.broadcast(dkeys)
+            data = self._read_dirs(data_dirs, snap)
             pieces.append(
-                self._read_dirs(data_dirs, snap).join(
-                    dkeys, on=snap.key, how="left_anti"
-                )
+                data.join(dkeys, on=snap.key, how="left_anti").select(*data.columns)
             )
         if plain or not pieces:
             pieces.insert(0, self._read_dirs(plain, snap))
@@ -1844,7 +1849,7 @@ class LakeTable:
         if as_of is not None:
             version = self.version_as_of(as_of)
         snap = self.snapshot(version)
-        return self._read_with_deletes(snap, snap.buckets)
+        return self._read_with_deletes(snap, self._split_dirs(snap)[0])
 
     def _fsck_segments(self) -> list[dict]:
         """Segmented-manifest layer audit: every segment referenced by
@@ -2046,35 +2051,43 @@ class LakeTable:
         fail too) and an unreadable parquet footer falls back to a
         Spark count of ONLY that dir — never a silently-wrong total.
         """
-        snap = self.snapshot(version)
-        live = snap.all_dirs()
+        return self._exact_count(self.snapshot(version))
+
+    def _exact_count(self, snap: Snapshot, column: str | None = None) -> int:
+        """The exact-count ladder shared by ``row_count`` (``column``
+        None: every row) and ``null_count`` (rows where ``column`` IS
+        NULL): era-covered dirs count from their masked read; every
+        other dir from its manifest stat, else from its parquet
+        footers, else — a footer pyarrow cannot read — from a Spark
+        count of that dir alone."""
         covered, masked_buckets = self._masked_buckets(snap)
-        total = 0
-        if covered:
-            total += self._read_with_deletes(snap, masked_buckets).count()
-        missing: list[str] = []
-        for d in live:
+
+        def spark_count(df: DataFrame) -> int:
+            return (df if column is None else df.where(F.col(column).isNull())).count()
+
+        total = spark_count(self._read_with_deletes(snap, masked_buckets)) if covered else 0
+        for d in snap.all_dirs():
             if d in covered:
                 continue
-            rows = snap.stats.get(d, {}).get(ROWS_STAT)
-            if rows is None:
-                missing.append(d)
-            else:
-                total += int(rows[0])
-        for d in missing:
+            # renames: a dir written under an old physical name keeps
+            # its stats and footers under that name
+            phys = snap.renames.get(d, {}).get(column, column)
+            stat = ROWS_STAT if column is None else NULLS_STAT_PREFIX + phys
+            ent = snap.stats.get(d, {}).get(stat)
+            if ent is not None:
+                total += int(ent[0])
+                continue
             abs_dir = d if d.startswith("/") else self.fs.join(self.location, d)
-            # a vanished dir is manifest<->disk corruption: raise, never
-            # skip (the silent-continue here was a wrong-answer bug)
-            names = self.fs.listdir(abs_dir)
+            # a vanished dir is manifest<->disk corruption: listdir
+            # raises, never skip (a silent continue is a wrong answer)
             counts = [
-                _footer_num_rows(self.fs.join(abs_dir, f))
-                for f in names if f.endswith(".parquet")
+                _footer_num_rows(p) if column is None else _footer_null_count(p, phys)
+                for p in (self.fs.join(abs_dir, f)
+                          for f in self.fs.listdir(abs_dir) if f.endswith(".parquet"))
             ]
-            if any(n < 0 for n in counts):
-                # footer unreadable by pyarrow: exact count of just
-                # this dir via the engine (loud if truly corrupt) —
-                # never fold the -1 sentinel into the total
-                total += self._read_dirs([d], snap).count()
+            if any(c is None or c < 0 for c in counts):
+                # never fold the -1 / None sentinel into the total
+                total += spark_count(self._read_dirs([d], snap))
             else:
                 total += sum(counts)
         return total
@@ -2143,56 +2156,17 @@ class LakeTable:
         """Exact ``COUNT(*) WHERE col IS NULL`` without a data scan —
         the fourth metadata aggregate (Iceberg manifests carry
         ``null_value_counts`` for the same reason: null-ratio DQ audits
-        at 100 TB should be manifest math, not table reads). Ladder
-        mirrors :meth:`row_count`:
-
-        1. **Manifest**: sum the per-dir ``#nulls:<col>`` pseudo-stats
-           harvested from parquet footers at commit — zero IO.
-        2. **Footer fallback** for dirs without the stat: read ONLY
-           those dirs' footers (rename-aware physical column).
-        3. **Per-dir scan fallback** when a footer lacks a valid null
-           count — never a silently-wrong total.
-        4. **Hybrid under live MoR eras**: era-covered dirs take the
-           masked read; uncovered dirs stay on 1-3.
+        at 100 TB should be manifest math, not table reads). It runs
+        :meth:`row_count`'s ladder (``_exact_count``) on the per-dir
+        ``#nulls:<col>`` pseudo-stats and footer null counts, under the
+        dir's physical column name; a footer without a valid null count
+        takes the per-dir scan — never a silently-wrong total.
         """
         snap = self.snapshot(version)
         fields = T.StructType.fromJson(json.loads(snap.schema_json)).fields
         if column not in {f.name for f in fields}:
             raise ValueError(f"no column {column!r} on {self.location}")
-        live = snap.all_dirs()
-        covered, masked_buckets = self._masked_buckets(snap)
-        total = 0
-        if covered:
-            total += (
-                self._read_with_deletes(snap, masked_buckets)
-                .where(F.col(column).isNull())
-                .count()
-            )
-        for d in live:
-            if d in covered:
-                continue
-            phys = snap.renames.get(d, {}).get(column, column)
-            ent = snap.stats.get(d, {}).get(NULLS_STAT_PREFIX + phys)
-            if ent is not None:
-                total += int(ent[0])
-                continue
-            # footer fallback, then per-dir scan if any file's footer
-            # lacks a valid null count
-            abs_dir = d if d.startswith("/") else self.fs.join(self.location, d)
-            counts = [
-                _footer_null_count(self.fs.join(abs_dir, f), phys)
-                for f in self.fs.listdir(abs_dir)
-                if f.endswith(".parquet")
-            ]
-            if any(c is None for c in counts):
-                total += (
-                    self._read_dirs([d], snap)
-                    .where(F.col(column).isNull())
-                    .count()
-                )
-            else:
-                total += sum(counts)
-        return total
+        return self._exact_count(snap, column)
 
     # ------------------------------------------------------- NDV sketches
     def _ndv_expr(self, snap: Snapshot, column: str):
@@ -2628,12 +2602,8 @@ class LakeTable:
         ``(col, op, value)`` conjunction — or, for a list of
         conjunctions, their disjunction (see ``_norm_dnf``)."""
         snap = self.snapshot(version)
-        dnf = _norm_dnf(filters)  # once, not per dir
-        return [
-            d
-            for d in snap.all_dirs()
-            if self._dir_may_match_dnf(snap.stats.get(d, {}), dnf, snap.renames.get(d))
-        ]
+        read, _ = self._split_dirs(snap, dict.fromkeys(snap.buckets, _norm_dnf(filters)))
+        return [d for ds in read.values() for d in ds]
 
     def scan(self, filters, version: int | None = None) -> DataFrame:
         """Filtered scan with manifest-level data skipping: directories
@@ -2650,11 +2620,10 @@ class LakeTable:
         only when some branch can match its stats. The exact predicate
         is re-applied on the surviving data."""
         snap = self.snapshot(version)
-        keep = set(self.candidate_dirs(filters, snap.version))
-        df = self._read_with_deletes(
-            snap, {b: [d for d in ds if d in keep] for b, ds in snap.buckets.items()}
-        )
-        cond = _dnf_expr(_norm_dnf(filters))
+        dnf = _norm_dnf(filters)
+        read, _ = self._split_dirs(snap, dict.fromkeys(snap.buckets, dnf))
+        df = self._read_with_deletes(snap, read)
+        cond = _dnf_expr(dnf)
         return df.filter(cond) if cond is not None else df
 
     def scan_report(self, filters, version: int | None = None) -> dict:
@@ -2664,11 +2633,13 @@ class LakeTable:
         no data IO — run it before a 100 TB scan to check the predicate
         actually hits the clustered/bucketed layout (a report showing
         0 pruned on a time filter means the table needs a sort-order
-        declaration + compaction, not a bigger cluster)."""
+        declaration + compaction, not a bigger cluster). The counts
+        come from the same ``_split_dirs`` plan that ``scan`` reads."""
         snap = self.snapshot(version)
-        all_dirs = snap.all_dirs()
-        kept = set(self.candidate_dirs(filters, snap.version))
         dnf = _norm_dnf(filters)
+        read, pruned = self._split_dirs(snap, dict.fromkeys(snap.buckets, dnf))
+        n_read = sum(map(len, read.values()))
+        n_pruned = sum(map(len, pruned.values()))
 
         def _keys(d: str) -> list[str]:
             # the stat a filter prunes on, under the dir's PHYSICAL
@@ -2685,9 +2656,8 @@ class LakeTable:
             return out
 
         no_stats = [
-            d for d in all_dirs
-            if d in kept
-            and not any(k in snap.stats.get(d, {}) for k in _keys(d))
+            d for ds in read.values() for d in ds
+            if not any(k in snap.stats.get(d, {}) for k in _keys(d))
         ]
         return {
             "filters": (
@@ -2695,13 +2665,11 @@ class LakeTable:
                 if all(_is_filter_triple(f) for f in filters)
                 else [[list(f) for f in br] for br in filters]
             ),
-            "total_dirs": len(all_dirs),
-            "read_dirs": len(kept),
-            "pruned_dirs": len(all_dirs) - len(kept),
+            "total_dirs": n_read + n_pruned,
+            "read_dirs": n_read,
+            "pruned_dirs": n_pruned,
             "kept_without_stats": len(no_stats),
-            "pruned_pct": round(
-                100.0 * (len(all_dirs) - len(kept)) / max(1, len(all_dirs)), 1
-            ),
+            "pruned_pct": round(100.0 * n_pruned / max(1, n_read + n_pruned), 1),
         }
 
     def read_buckets(self, bucket_ids: list[int], version: int | None = None) -> DataFrame:
@@ -2709,8 +2677,8 @@ class LakeTable:
         Applies each bucket's merge-on-read deletes, so DML that reads
         through here (merge/delete) always sees post-delete state."""
         snap = self.snapshot(version)
-        wanted = {str(b): snap.buckets.get(str(b), []) for b in bucket_ids}
-        return self._read_with_deletes(snap, wanted)
+        read, _ = self._split_dirs(snap, dict.fromkeys(str(b) for b in bucket_ids))
+        return self._read_with_deletes(snap, read)
 
     def snapshots(self) -> DataFrame:
         """Metadata table, like Iceberg's ``table.snapshots``."""
@@ -3301,10 +3269,13 @@ class LakeTable:
         A single-column key with its values in hand reads through an
         IN-list; every other case is a semi-join against ``keys_df``."""
         snap = self.snapshot(version)
+        # a USING semi-join moves the key columns first: both semi-join
+        # returns project the table's column order back
         if not snap.key:
-            return self.read(snap.version).join(
+            full = self.read(snap.version)
+            return full.join(
                 keys_df.distinct(), on=list(keys_df.columns), how="left_semi"
-            )
+            ).select(*full.columns)
         probe = keys_df.select(*snap.key)
         rows = None
         if all(f.dataType in _ROUTABLE_KEY_TYPES for f in probe.schema.fields):
@@ -3338,7 +3309,7 @@ class LakeTable:
         # broadcast vs shuffle itself (same reasoning as the
         # DELETE_BROADCAST_MAX_BYTES gate on the MoR read path; Iceberg
         # likewise leaves read-side join strategy to the engine).
-        return pruned.join(probe, on=snap.key, how="left_semi")
+        return pruned.join(probe, on=snap.key, how="left_semi").select(*pruned.columns)
 
     def _affected_buckets(self, source: DataFrame, snap: Snapshot) -> list[int]:
         if snap.n_buckets <= 1:
@@ -3624,18 +3595,21 @@ class LakeTable:
                                  txn_app, txn_version)
 
     def _split_dirs(
-        self, snap: Snapshot, preds: dict[str, list[list[tuple]] | None],
+        self, snap: Snapshot, preds: dict[str, list[list[tuple]] | None] | None = None,
     ) -> tuple[dict[str, list[str]], dict[str, list[str]]]:
-        """Dir-level data skipping on the WRITE path (the Iceberg
-        file-level min/max pruning analogue): split the dirs of each
-        bucket in ``preds`` into ``(touched, kept)``. A dir is touched
-        when its harvested footer stats may satisfy the bucket's
-        normalized DNF predicate (``None`` touches every dir); a kept
-        dir cannot hold a matching row, so DML carries it into the new
-        snapshot unread and a narrow DML costs ∝ the dirs it can touch,
-        not the history a bucket has accumulated. Conservative by
-        construction: missing footer stats or incomparable types mean
-        "touched"."""
+        """The one dir planner of every read and DML (the Iceberg scan
+        planner's file-level min/max pruning analogue): split the dirs
+        of each bucket in ``preds`` into ``(touched, kept)`` — dirs to
+        read and dirs pruned. A dir is touched when its harvested footer
+        stats may satisfy the bucket's normalized DNF predicate (``None``
+        touches every dir; ``preds=None`` every dir of every bucket); a
+        kept dir cannot hold a matching row, so a scan never lists it and
+        DML carries it into the new snapshot unread — a narrow DML costs
+        ∝ the dirs it can touch, not the history a bucket has
+        accumulated. Conservative by construction: missing footer stats
+        or incomparable types mean "touched"."""
+        if preds is None:
+            preds = dict.fromkeys(snap.buckets)
         touched: dict[str, list[str]] = {}
         kept: dict[str, list[str]] = {}
         for bs, dnf in preds.items():
@@ -4123,10 +4097,7 @@ class LakeTable:
         ]
         if not todo:
             return {"rewritten_buckets": 0, "rewritten_dirs": 0}
-        union = None
-        for b in todo:
-            part = self._read_with_deletes(snap, {b: snap.buckets[b]})
-            union = part if union is None else union.unionByName(part)
+        union = self._read_with_deletes(snap, self._split_dirs(snap, dict.fromkeys(todo))[0])
         drop_after = None
         if zorder_by:
             from datalake_iceberg_spark.functions.zorder import zvalue
@@ -4462,7 +4433,7 @@ class LakeTable:
         if not todo:
             return {"rewritten_buckets": 0, "removed_delete_files": 0}
         n_delete_files = sum(len(snap.deletes[b]) for b in todo)
-        folded = self._read_with_deletes(snap, {b: snap.buckets[b] for b in todo})
+        folded = self._read_with_deletes(snap, self._split_dirs(snap, dict.fromkeys(todo))[0])
         # per-bucket input weights from manifest #bytes (pure snapshot
         # math): the fold rewrites a delete-bearing SUBSET whose content
         # the workload made uneven, so the write sub-splits heavy

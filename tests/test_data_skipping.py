@@ -312,3 +312,44 @@ def test_dnf_explicit_or_and_markers(spark, tmp_path):
         t.scan({"or": []})
     with pytest.raises(ValueError, match='"or"'):
         t.scan({"or": [("pk", "<", 5)], "and": [("pk", ">", 1)]})
+
+
+def test_scan_report_counts_the_dirs_scan_reads(spark, tmp_path, monkeypatch):
+    """``scan_report``'s ``read_dirs``/``pruned_dirs`` are the dirs
+    ``scan`` hands the read path, under a live merge-on-read era and
+    after a rename (stats stay under the old physical name), for the
+    conjunction, DNF, ``in`` and ``is_null`` filters of the tests above."""
+    from datalake_iceberg_spark.tables import LakeTable
+
+    cat = LakeCatalog(spark, str(tmp_path / "wh"))
+    t = cat.create_or_replace("db.agree", _batch(spark, 0, 100, 1), key=["pk"], n_buckets=2)
+    t.append(_batch(spark, 100, 200, 2))
+    t.rename_column("pk", "k")
+    t.append(_batch(spark, 200, 300, 3).withColumnRenamed("pk", "k")
+             .withColumn("v", F.lit(None).cast("double")))
+    t.delete_keys(spark.createDataFrame([(5,), (150,), (250,)], "k long"),
+                  mode="merge-on-read")
+    snap = t.snapshot()
+    assert snap.deletes and snap.renames
+    live = set(snap.all_dirs())
+
+    seen = []
+    orig = LakeTable._read_with_deletes
+
+    def spy(self, s, bucket_dirs):
+        seen.append(bucket_dirs)
+        return orig(self, s, bucket_dirs)
+
+    monkeypatch.setattr(LakeTable, "_read_with_deletes", spy)
+    for filters, rows in (
+        ([("k", ">=", 120), ("k", "<", 180)], 59),
+        ([[("k", "<", 50)], [("k", ">=", 250)]], 98),
+        ([("k", "in", [1005, 105])], 1),
+        ([("v", "is_null")], 99),
+    ):
+        seen.clear()
+        assert t.scan(filters).count() == rows, filters
+        read = {d for ds in seen[0].values() for d in ds}
+        rep = t.scan_report(filters)
+        assert (rep["read_dirs"], rep["pruned_dirs"]) == (len(read), len(live - read)), filters
+        assert rep["pruned_dirs"] > 0, filters
